@@ -25,6 +25,18 @@ object Bench {
     ()
   }
 
+  /** `path` with `_c$cpus` before the file name's extension. Only a dot
+    * inside the file name (after the last `/`, and not its first
+    * character) starts an extension: `/data/run.1/BENCH` gains the suffix
+    * at its end, not inside the directory name.
+    */
+  private[graft] def cpuSibling(path: String, cpus: String): String = {
+    val dot = path.lastIndexOf('.')
+    if (dot > path.lastIndexOf('/') + 1)
+      path.substring(0, dot) + s"_c$cpus" + path.substring(dot)
+    else path + s"_c$cpus"
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // optional args = query names to bench (dev loop); default all
@@ -40,12 +52,7 @@ object Bench {
     // per-query map except in a truncated stdout tail. Every write goes
     // to BOTH the contract path (unchanged) and a `_c$cpus` sibling, so
     // each core count's per-query detail survives the other run.
-    val outFileCpu = {
-      val dot = outFile.lastIndexOf('.')
-      if (dot > 0) outFile.substring(0, dot) + s"_c$cpus" +
-        outFile.substring(dot)
-      else outFile + s"_c$cpus"
-    }
+    val outFileCpu = cpuSibling(outFile, cpus)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

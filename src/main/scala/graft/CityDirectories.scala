@@ -18,6 +18,8 @@ import org.apache.spark.sql.functions._
   * dependencies); this implementation preserves that: parse/geocode/
   * transform produce NO shuffle — the only exchanges are the optional
   * sink `partitionBy` and the `geocodeViaJoin` variant's re-collect.
+  * Every step is also a single pass over its input: chained uncached,
+  * `writeUnion(transform(geocode(parse(…))))` reads each archive once.
   */
 object CityDirectories {
 
@@ -59,7 +61,10 @@ object CityDirectories {
     Geocoder.geocode(lines, Geocoder.buildIndex(spark, dim))
 
   /** `transform` step (city-directories.js:338-451): tagged union of
-    * object/relation/log records.
+    * object/relation/log records, generated in one pass over `geocoded`
+    * (see [[TransformOps.taggedUnion]]). A union of one branch per record
+    * kind would re-run the uncached scan → detect → parse → geocode
+    * lineage once per branch.
     */
   def transform(geocoded: DataFrame): DataFrame =
     TransformOps.taggedUnion(geocoded)

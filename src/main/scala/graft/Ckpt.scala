@@ -89,27 +89,33 @@ object Ckpt {
     val ck = reliableDir(df) match {
       case Some(dir) =>
         val sc = df.sparkSession.sparkContext
-        // setCheckpointDir appends a fresh UUID subdir each call, so
-        // re-setting per checkpoint would litter — only when the
-        // current context dir is not under the configured dir (with a
-        // separator boundary: "/data/ckpt-app" must not satisfy a
-        // "/data/ckpt" conf — review r17).
-        if (!sc.getCheckpointDir.exists(cur => underDir(cur, dir))) {
-          // overriding a dir graft did not set itself re-homes the host
-          // application's own .checkpoint() output too — documented on
-          // DirConf; surfaced once per pair so it can't scroll away
-          sc.getCheckpointDir
-            .filter(cur => !setDirs.contains(cur))
-            .foreach { cur =>
-              if (warnedForeign.add((cur, dir))) System.err.println(
-                s"[graft.Ckpt] WARNING: re-pointing context checkpoint " +
-                  s"dir '$cur' -> '$dir' ($DirConf is set); the host " +
-                  "application's own .checkpoint() calls now write " +
-                  "there too — see Ckpt.DirConf scaladoc")
-            }
-          sc.setCheckpointDir(dir)
+        // check, set and record under one lock: two driver threads
+        // checkpointing at once (overlapped loop materializations) could
+        // otherwise both see a foreign dir and both set it, leaving the
+        // first `<dir>/<uuid>` unrecorded and its files unowned
+        setDirs.synchronized {
+          // setCheckpointDir appends a fresh UUID subdir each call, so
+          // re-setting per checkpoint would litter — only when the
+          // current context dir is not under the configured dir (with a
+          // separator boundary: "/data/ckpt-app" must not satisfy a
+          // "/data/ckpt" conf — review r17).
+          if (!sc.getCheckpointDir.exists(cur => underDir(cur, dir))) {
+            // overriding a dir graft did not set itself re-homes the host
+            // application's own .checkpoint() output too — documented on
+            // DirConf; surfaced once per pair so it can't scroll away
+            sc.getCheckpointDir
+              .filter(cur => !setDirs.contains(cur))
+              .foreach { cur =>
+                if (warnedForeign.add((cur, dir))) System.err.println(
+                  s"[graft.Ckpt] WARNING: re-pointing context checkpoint " +
+                    s"dir '$cur' -> '$dir' ($DirConf is set); the host " +
+                    "application's own .checkpoint() calls now write " +
+                    "there too — see Ckpt.DirConf scaladoc")
+              }
+            sc.setCheckpointDir(dir)
+          }
+          sc.getCheckpointDir.foreach(setDirs.add)
         }
-        sc.getCheckpointDir.foreach(setDirs.add)
         df.checkpoint(eager = eager)
       case None => df.localCheckpoint(eager = eager, storageLevel = level)
     }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The reference's `transform` step (city-directories.js:338-451): each
@@ -9,11 +9,15 @@ import org.apache.spark.sql.functions._
   *   relation — one `st:in` edge per found address (:395-399, :438-441)
   *   log      — id-minting failures (:356-364) and geocode misses (:401-404)
   *
-  * Spark-first: three narrow `select`s over the same input, unioned by
-  * name (SURVEY.md O-31/O-40). No explode-of-array-of-variants, no UDFs —
-  * every branch is a codegen'd projection, and the union is three
-  * pipelined map stages, not a shuffle. Write side: `partitionBy("type")`
-  * gives the reference's per-kind outputs in one pass.
+  * One pass over the input (SURVEY.md O-31/O-40): each line becomes an
+  * array of records, every record a struct of all `unionColumns`, and one
+  * `inline` generator turns the array into rows. A line with a minted id
+  * yields its object, its relations and its miss logs; a line without one
+  * yields its id log. Not a `unionByName` of one `select` per kind: the
+  * input is uncached, so a union re-runs its whole lineage (archive scan,
+  * column detection, parse and geocode) once per branch. No UDFs and no
+  * shuffle. Write side: `partitionBy("type")` gives the reference's
+  * per-kind outputs in one pass.
   *
   * Input columns: uuid, yearMin, yearMax, pageUuid, pageNum, bbox, text,
   * parsed (struct), geocoded (array<struct<found,result,error>>).
@@ -54,33 +58,33 @@ object TransformOps {
   }
 
   def taggedUnion(lines: DataFrame): DataFrame = {
-    val id = CityDirOps.mintId(
-      col("yearMin"), col("yearMax"), col("pageNum"), col("bbox"))
-    val withId = lines.withColumn("_id", id)
-
     val found = filter(col("geocoded"), g => g.getField("found"))
-    // address projection (city-directories.js:384-391)
-    val addresses = transform(found, g => struct(
-      g.getField("result").getField("properties").getField("address")
-        .getField("id").as("id"),
-      g.getField("result").getField("properties").getField("address")
-        .getField("name").as("name"),
-      g.getField("result").getField("properties").getField("street")
-        .getField("name").as("street"),
-      g.getField("result").getField("properties").getField("street")
-        .getField("id").as("streetId")))
+    val withId = lines
+      .withColumn("_id", CityDirOps.mintId(
+        col("yearMin"), col("yearMax"), col("pageNum"), col("bbox")))
+      // address projection (city-directories.js:384-391), shared by the
+      // object payload and the relations
+      .withColumn("_addresses", transform(found, g => struct(
+        g.getField("result").getField("properties").getField("address")
+          .getField("id").as("id"),
+        g.getField("result").getField("properties").getField("address")
+          .getField("name").as("name"),
+        g.getField("result").getField("properties").getField("street")
+          .getField("name").as("street"),
+        g.getField("result").getField("properties").getField("street")
+          .getField("id").as("streetId"))))
     val geometries = transform(found, g => g.getField("result").getField("geometry"))
 
     // object record (city-directories.js:410-429); validSince/validUntil
     // are the year union's min/max (:416-417)
-    val objects = withId.filter(col("_id").isNotNull).select(
-      lit("object").as("type"),
-      col("_id").as("id"),
-      lit("st:Person").as("objType"),
-      CityDirOps.firstElement(col("parsed.subjects")).as("name"),
-      col("yearMin").as("validSince"),
-      col("yearMax").as("validUntil"),
-      struct(
+    val objectFields = Map(
+      "type" -> lit("object"),
+      "id" -> col("_id"),
+      "objType" -> lit("st:Person"),
+      "name" -> CityDirOps.firstElement(col("parsed.subjects")),
+      "validSince" -> col("yearMin"),
+      "validUntil" -> col("yearMax"),
+      "data" -> struct(
         col("uuid").as("volumeUuid"),
         col("pageUuid"),
         col("pageNum"),
@@ -88,37 +92,46 @@ object TransformOps {
         col("text"),
         CityDirOps.firstElement(col("parsed.occupations")).as("occupation"),
         col("parsed.locations").as("locations"),
-        addresses.as("geocoded")).as("data"),
-      CityDirOps.multiPoint(geometries).as("geometry"))
+        col("_addresses").as("geocoded")),
+      "geometry" -> CityDirOps.multiPoint(geometries))
+    // every kind is a struct of all `unionColumns`, so the kinds share one
+    // array type; a column a kind does not carry is a null of the column's
+    // type (the object's where it carries the column, else a string)
+    val nullOf = withId.select(unionColumns.map(c =>
+        objectFields.getOrElse(c, lit(null).cast("string")).as(c)): _*)
+      .schema.fields.map(f => f.name -> lit(null).cast(f.dataType)).toMap
+    def record(fields: (String, Column)*): Column = {
+      val given = fields.toMap
+      struct(unionColumns.map(c => given.getOrElse(c, nullOf(c)).as(c)): _*)
+    }
 
     // edge records: one per found address (city-directories.js:395-399)
-    val relations = withId.filter(col("_id").isNotNull)
-      .select(col("_id"), explode(addresses).as("_addr"))
-      .select(
-        lit("relation").as("type"),
-        col("_addr.id").as("to"),
-        col("_id").as("from"),
-        lit("st:in").as("relType"))
-
+    val relations = transform(col("_addresses"), a => record(
+      "type" -> lit("relation"),
+      "to" -> a.getField("id"),
+      "from" -> col("_id"),
+      "relType" -> lit("st:in")))
     // log records: geocode misses (city-directories.js:401-404) …
-    val missLogs = withId.filter(col("_id").isNotNull)
-      .select(col("_id"),
-        explode(filter(col("geocoded"), g => !g.getField("found"))).as("_miss"))
-      .select(
-        lit("log").as("type"),
-        col("_id").as("id"),
-        col("_miss.error").as("error"))
+    val missLogs = transform(
+      filter(col("geocoded"), g => !g.getField("found")), m => record(
+        "type" -> lit("log"),
+        "id" -> col("_id"),
+        "error" -> m.getField("error")))
     // … and id-minting failures (city-directories.js:356-364; message
     // string kept verbatim, typo included)
-    val idLogs = withId.filter(col("_id").isNull).select(
-      lit("log").as("type"),
-      lit("Coult not create ID").as("error"),
-      col("text"))
+    val idLog = record(
+      "type" -> lit("log"),
+      "error" -> lit("Coult not create ID"),
+      "text" -> col("text"))
 
-    objects
-      .unionByName(relations, allowMissingColumns = true)
-      .unionByName(missLogs, allowMissingColumns = true)
-      .unionByName(idLogs, allowMissingColumns = true)
+    // a null `geocoded` still yields its object record: concat would turn
+    // the whole array null, so empty the missing relations and misses
+    val records = when(col("_id").isNotNull, concat(
+        array(record(objectFields.toSeq: _*)),
+        coalesce(relations, array()),
+        coalesce(missLogs, array())))
+      .otherwise(array(idLog))
+    withId.select(inline(records))
   }
 
   /** Upsert (merge) without a table format: the updated rows win on

@@ -47,4 +47,30 @@ class CkptSpec extends SparkSpec {
       org.apache.commons.io.FileUtils.deleteQuietly(sibling.toFile)
     }
   }
+
+  test("concurrent first use sets the context dir once and records it") {
+    val root = Files.createTempDirectory("graft-ckpt-race")
+    val frames = (1 to 4).map(i => Seq(i.toLong).toDF("id"))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(frames.size)
+    try {
+      (1 to 3).foreach { round =>
+        val dir = root.resolve(s"ckpt-$round")
+        spark.conf.set(Ckpt.DirConf, dir.toString)
+        // all threads reach the check-and-set together
+        val start = new java.util.concurrent.CyclicBarrier(frames.size)
+        frames.map(df => pool.submit(() => { start.await(); Ckpt(df) }))
+          .foreach(_.get())
+        spark.conf.unset(Ckpt.DirConf)
+        // each setCheckpointDir call makes a fresh <dir>/<uuid>
+        val made = dir.toFile.listFiles().toSeq
+        assert(made.size == 1, s"round $round: context dir set ${made.size} times")
+        assert(Ckpt.owns(frames.head, made.head.toString),
+          s"context dir ${made.head} was set but never recorded")
+      }
+    } finally {
+      pool.shutdown()
+      spark.conf.unset(Ckpt.DirConf)
+      org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
+    }
+  }
 }
