@@ -24,9 +24,12 @@ import org.apache.spark.sql.functions._
 object CityDirectories {
 
   /** `parse` step (city-directories.js:170-259): manifest → year filter →
-    * availability filter (join in the source) → archive scan with pushed
-    * page-range filter → column detection → line explode → dot-collapse →
-    * entry parse.
+    * availability filter → archive scan with pushed page-range filter →
+    * column detection → line explode → dot-collapse → entry parse. The
+    * year-filtered manifest is collected once on the driver, and the
+    * archive scan looks each archive's rows up in it (see
+    * [[HocrArchive.readPages]]): no join and no broadcast stage runs
+    * before the scan.
     */
   def parse(spark: SparkSession, manifest: Dataset[DirectoryMeta],
             archiveDir: String, minYear: Option[Int] = None,
@@ -54,7 +57,8 @@ object CityDirectories {
   }
 
   /** `geocode` step (city-directories.js:272-323): broadcast-lookup every
-    * parsed location, misses in-band.
+    * parsed location in a packed [[graft.geocode.GeoIndex]], misses
+    * in-band.
     */
   def geocode(spark: SparkSession, lines: DataFrame,
               dim: Dataset[GeoAddress]): DataFrame =

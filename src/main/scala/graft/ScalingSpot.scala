@@ -142,29 +142,34 @@ object ScalingSpot {
 
     val qs = SparkEntry.queries
     val ordered = lanes.filter(qs.contains)
+    // min over the passes that succeeded, failures counted apart: a
+    // lane with no successful pass reports null, not a time
     var mins = Map.empty[String, Double]
+    var failed = ordered.map(_ -> 0).toMap
     for (pass <- 1 to (runs + 1)) { // pass 1 = warm + timed (Bench rule)
       for (name <- ordered) {
         spark.sparkContext.setJobDescription(s"spot:$name")
         val t0 = System.nanoTime()
-        val sec = try { force(qs(name)(spark, spotDir))
-          (System.nanoTime() - t0) / 1e9 }
-        catch { case e: Throwable =>
-          System.err.println(s"[spot] $name FAILED: ${e.getMessage}")
-          -1.0
+        try {
+          force(qs(name)(spark, spotDir))
+          val sec = (System.nanoTime() - t0) / 1e9
+          mins = mins.updated(name,
+            math.min(mins.getOrElse(name, Double.MaxValue), sec))
+          System.err.println(f"[spot] pass $pass $name: $sec%.2f s")
+        } catch { case e: Throwable =>
+          failed = failed.updated(name, failed(name) + 1)
+          System.err.println(s"[spot] pass $pass $name FAILED: ${e.getMessage}")
         }
-        mins = mins.updated(name,
-          if (mins.get(name).exists(_ < 0) || sec < 0) -1.0
-          else math.min(mins.getOrElse(name, Double.MaxValue), sec))
-        System.err.println(f"[spot] pass $pass $name: $sec%.2f s")
       }
     }
     Leases.releaseAll()
-    val qjson = ordered.map(n => s""""$n":${mins(n)}""").mkString(",")
+    val qjson = ordered.map(n =>
+      s""""$n":${mins.get(n).fold("null")(_.toString)}""").mkString(",")
+    val fjson = ordered.map(n => s""""$n":${failed(n)}""").mkString(",")
     val json = s"""{"metric":"scaling_spot","cpus":$cpus,""" +
       s""""copies":$copies,"runs":${runs + 1},""" +
       s""""prelude_sec":${math.round(preludeSec * 1000) / 1000.0},""" +
-      s""""queries":{$qjson}}"""
+      s""""queries":{$qjson},"failed_passes":{$fjson}}"""
     println(json)
     try Files.writeString(
       Paths.get(s"/root/repo/SCALING_SPOT_c$cpus.json"), json + "\n")

@@ -1,9 +1,14 @@
 package graft.geocode
 
 import graft.model._
+import java.util.regex.Pattern
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.api.java.UDF1
+import org.apache.spark.sql.catalyst.ScalaReflection
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
+import scala.jdk.CollectionConverters._
 
 /** Historical-street geocoder: the reference's per-address lookup against
   * the `nyc-streets` + `addresses` dimension (city-directories.js:272-323;
@@ -13,19 +18,25 @@ import org.apache.spark.sql.functions._
   * `{found:false, error}` (city-directories.js:298-309).
   *
   * Spark-first design — a BROADCAST LOOKUP, not a shuffle join:
-  *  - the dimension is normalized once, collected, and broadcast as a
-  *    hash map (a street dimension is, by construction, ≪ the fact
-  *    table: even all of NYC's historical addresses are ~10^6 rows /
-  *    ~100 MB — broadcastable on any executor profile that can run this
-  *    job);
+  *  - the dimension is collected once and broadcast as a [[GeoIndex]]
+  *    (a street dimension is, by construction, ≪ the fact table: even
+  *    all of NYC's historical addresses are ~10^6 rows / ~100 MB —
+  *    broadcastable on any executor profile that can run this job);
+  *  - the broadcast's representation matters: `SparkContext.broadcast`
+  *    runs `SizeEstimator` over the value and Java-serializes it on the
+  *    driver before any task starts. A `Map[String, GeoResult]` costs
+  *    both walks about twenty objects per entry: on a 10k-row
+  *    dimension the index build was 0.36–0.51 s of serial driver work
+  *    per run, all cores idle. The packed primitive arrays of
+  *    [[GeoIndex]] are sized and written in bulk (0.07–0.16 s);
   *  - each line's `parsed.locations` array is mapped through the
-  *    broadcast map in one row-local pass, so per-line result arrays
+  *    broadcast index in one row-local pass, so per-line result arrays
   *    keep their order and the fact side NEVER shuffles — same plan
   *    shape at 60k rows and at 100 TB;
   *  - a miss is data, not an exception: `{found:false, error}`.
   *
   * `geocodeViaJoin` is the explode → broadcast-equi-join → re-collect
-  * variant for dimensions too large to hold as one map; it keeps the
+  * variant for dimensions too large to hold as one index; it keeps the
   * join broadcast but pays a re-aggregation shuffle — documented
   * trade-off, not the default.
   */
@@ -39,7 +50,7 @@ object Geocoder {
     */
   /** SINGLE source of truth for the normalization rules — the Column and
     * String implementations below both derive from these, so the
-    * broadcast-map path and the join path can never normalize the same
+    * broadcast-index paths and the join paths can never normalize the same
     * address differently (the property spec asserts their agreement).
     */
   private val punctRe = "[.,;:']"
@@ -61,50 +72,60 @@ object Geocoder {
     regexp_replace(expanded, "\\s+", " ")
   }
 
-  def normalizeAddress(s: String): String = {
-    var x = s.trim.toLowerCase.replaceAll(punctRe, "")
-      .replaceAll(homeMarkerRe, "")
-    abbreviations.foreach { case (ab, full) =>
-      x = x.replaceAll(s"\\b$ab\\b", full)
-    }
-    x.replaceAll("\\s+", " ")
-  }
+  /** The String form's rules, compiled once: `String.replaceAll` would
+    * compile each of the 16 patterns again on every call. */
+  private lazy val stringRules: Seq[(Pattern, String)] =
+    ((punctRe -> "") +: (homeMarkerRe -> "") +:
+      abbreviations.map { case (ab, full) => s"\\b$ab\\b" -> full } :+
+      ("\\s+" -> " ")).map { case (re, to) => Pattern.compile(re) -> to }
 
-  /** Build the broadcast lookup index from the dimension table.
-    * Duplicate normalizedKeys resolve deterministically to the MIN
-    * addressId — the same rule the join variant applies, so the two
+  def normalizeAddress(s: String): String =
+    stringRules.foldLeft(s.trim.toLowerCase) { case (x, (re, to)) =>
+      re.matcher(x).replaceAll(to)
+    }
+
+  /** One row per normalizedKey: duplicate keys resolve deterministically
+    * to the MIN addressId — the rule the join variants apply too, so all
     * paths agree on ambiguous dimensions.
     */
-  def buildIndex(spark: SparkSession, dim: Dataset[GeoAddress])
-      : Broadcast[Map[String, GeoResult]] = {
-    val entries = dim.collect()
-      .groupBy(_.normalizedKey)
-      .map { case (key, as) =>
-        val a = as.minBy(_.addressId)
-        key -> GeoResult(
-          GeoProperties(
-            address = GeoRef(a.addressId, a.addressName),
-            street = GeoRef(a.streetId, a.streetName)),
-          a.geometry)
-      }
-    spark.sparkContext.broadcast(entries)
+  private[geocode] def minAddressPerKey(rows: Iterable[GeoAddress])
+      : Iterable[GeoAddress] = {
+    val byKey = new java.util.HashMap[String, GeoAddress]
+    rows.foreach(a => byKey.merge(a.normalizedKey, a,
+      (kept, next) => if (next.addressId < kept.addressId) next else kept))
+    byKey.values.asScala
   }
+
+  /** Build the broadcast lookup index from the dimension table (see
+    * [[GeoIndex]] for why it is not a map).
+    */
+  def buildIndex(spark: SparkSession, dim: Dataset[GeoAddress])
+      : Broadcast[GeoIndex] =
+    spark.sparkContext.broadcast(GeoIndex.build(dim.collect()))
+
+  /** The `geocoded` column's type: what a typed Scala UDF returning
+    * `Seq[Geocoded]` declares. Derived once, so [[geocode]] builds its
+    * UDF without the per-call TypeTag reflection of `udf { … }`.
+    */
+  private lazy val geocodedType: DataType =
+    ScalaReflection.schemaFor[Seq[Geocoded]].dataType
 
   /** Attach `geocoded: array<struct<found,result,error>>` aligned 1:1
     * with `parsed.locations` (city-directories.js:294-315).
     */
-  def geocode(df: DataFrame, index: Broadcast[Map[String, GeoResult]],
+  def geocode(df: DataFrame, index: Broadcast[GeoIndex],
               locationsCol: String = "parsed.locations"): DataFrame = {
-    val lookup = udf { (locations: Seq[String]) =>
-      if (locations == null) Seq.empty[Geocoded]
-      else locations.map { value =>
-        index.value.get(normalizeAddress(value)) match {
-          case Some(r) => Geocoded(found = true, Some(r), None)
-          case None => Geocoded(found = false, None,
-            Some(s"Address not found: $value"))
+    val lookup = udf(new UDF1[Seq[String], Seq[Geocoded]] {
+      def call(locations: Seq[String]): Seq[Geocoded] =
+        if (locations == null) Seq.empty
+        else locations.map { value =>
+          index.value.get(normalizeAddress(value)) match {
+            case Some(r) => Geocoded(found = true, Some(r), None)
+            case None => Geocoded(found = false, None,
+              Some(s"Address not found: $value"))
+          }
         }
-      }
-    }
+    }, geocodedType)
     df.withColumn("geocoded",
       lookup(expr(s"transform($locationsCol, l -> l.value)")))
   }
@@ -218,17 +239,13 @@ object Geocoder {
       s"geocoder fuzzy dimension exceeds maxIndexRows=$maxIndexRows — " +
         "the fuzzy index is a driver-built broadcast; use " +
         "geocodeFuzzyAuto (join fallback) or raise the bound deliberately")
-    // duplicate keys → min addressId, same rule as buildIndex
-    val entries = capped
-      .groupBy(_.normalizedKey)
-      .map { case (key, as) =>
-        val a = as.minBy(_.addressId)
-        key -> GeoResult(
-          GeoProperties(
-            address = GeoRef(a.addressId, a.addressName),
-            street = GeoRef(a.streetId, a.streetName)),
-          a.geometry)
-      }.toSeq
+    val entries = minAddressPerKey(capped).map { a =>
+      a.normalizedKey -> GeoResult(
+        GeoProperties(
+          address = GeoRef(a.addressId, a.addressName),
+          street = GeoRef(a.streetId, a.streetName)),
+        a.geometry)
+    }.toSeq
     val exact = entries.toMap
     val (numbered, digitless) =
       entries.partition { case (key, _) => houseBlock(key).nonEmpty }
@@ -286,7 +303,7 @@ object Geocoder {
   }
 
   /** Driver-safety guardrail for [[geocodeAuto]]: the largest dimension
-    * the broadcast-map path may collect. ~2M addresses ≈ low hundreds
+    * broadcast-index path may collect. ~2M addresses ≈ low hundreds
     * of MB as JVM objects — comfortably inside a default driver heap;
     * a full historical-city dimension (~10^6) stays on the fast path.
     */
@@ -309,7 +326,7 @@ object Geocoder {
     dim.toDF().select(lit(1).as("_one")).take(cap + 1).length <= cap
   }
 
-  /** Auto-guardrailed geocode: picks the broadcast-map path
+  /** Auto-guardrailed geocode: picks the broadcast-index path
     * ([[buildIndex]] + [[geocode]]) when the dimension is small enough
     * to collect safely, and falls back to [[geocodeViaJoin]] above the
     * threshold — so an unexpectedly large dimension degrades to one

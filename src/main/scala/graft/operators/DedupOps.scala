@@ -1258,6 +1258,14 @@ object DedupOps {
     * never a posting list), then re-joined 1:df — linear in the gram
     * table; after the filter every gram key fans out ≤ maxTruthDf ×
     * (sampled ≤ maxTruthDf) pairs, the dd12 per-key bound.
+    *
+    * ONE LIVE RESULT per process: the returned frame reads a staged
+    * checkpoint whose release is parked under one process-global
+    * [[graft.Leases]] key, so the NEXT call to `lshRecallEval` (any
+    * session, any arguments) frees it. Consume a result fully before
+    * calling again; a frame kept past the next call fails with missing
+    * blocks. A caller that needs overlapping results must use
+    * [[lshRecallEvalReleasable]] and release each handle itself.
     */
   def lshRecallEval(df: DataFrame, idCol: String, textCol: String,
                     shingleK: Int, numPerm: Int, bands: Int,

@@ -58,13 +58,16 @@ object TransformOps {
   }
 
   def taggedUnion(lines: DataFrame): DataFrame = {
-    val found = filter(col("geocoded"), g => g.getField("found"))
+    // per-line arrays are bound once as columns: the `inline` generator
+    // is not whole-stage codegen'd, so an expression it repeats is
+    // evaluated once per repetition
     val withId = lines
       .withColumn("_id", CityDirOps.mintId(
         col("yearMin"), col("yearMax"), col("pageNum"), col("bbox")))
+      .withColumn("_found", filter(col("geocoded"), g => g.getField("found")))
       // address projection (city-directories.js:384-391), shared by the
       // object payload and the relations
-      .withColumn("_addresses", transform(found, g => struct(
+      .withColumn("_addresses", transform(col("_found"), g => struct(
         g.getField("result").getField("properties").getField("address")
           .getField("id").as("id"),
         g.getField("result").getField("properties").getField("address")
@@ -73,7 +76,9 @@ object TransformOps {
           .getField("name").as("street"),
         g.getField("result").getField("properties").getField("street")
           .getField("id").as("streetId"))))
-    val geometries = transform(found, g => g.getField("result").getField("geometry"))
+      // found geometries, which `multiPoint` reads up to five times
+      .withColumn("_geometries", transform(col("_found"),
+        g => g.getField("result").getField("geometry")))
 
     // object record (city-directories.js:410-429); validSince/validUntil
     // are the year union's min/max (:416-417)
@@ -93,7 +98,7 @@ object TransformOps {
         CityDirOps.firstElement(col("parsed.occupations")).as("occupation"),
         col("parsed.locations").as("locations"),
         col("_addresses").as("geocoded")),
-      "geometry" -> CityDirOps.multiPoint(geometries))
+      "geometry" -> CityDirOps.multiPoint(col("_geometries")))
     // every kind is a struct of all `unionColumns`, so the kinds share one
     // array type; a column a kind does not carry is a null of the column's
     // type (the object's where it carries the column, else a string)

@@ -22,7 +22,7 @@ case class WarcProfile(nRecords: Int, nWarcinfo: Int, nRequest: Int,
   * version line, the named headers up to the blank line, and a
   * Content-Length hop over the payload (never parsed; HTTP message
   * payloads are opaque here, exactly the tar scan's entry discipline
-  * at `HocrArchive.scala:47` and the MP3/ADTS frame hop). The one
+  * in `HocrArchive.readArchive` and the MP3/ADTS frame hop). The one
   * payload read is the md5 update on response records, which is the
   * point of the profile.
   *

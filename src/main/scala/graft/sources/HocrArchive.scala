@@ -15,10 +15,16 @@ import graft.model.{DirectoryMeta, PageRecord}
   *  - `spark.read.format("binaryFile")` distributes one archive per task —
   *    at 100 TB the unit of parallelism is the volume (tens of thousands
   *    of archives spread over executors), no driver involvement;
-  *  - the manifest join is a `broadcast` inner join, which doubles as the
-  *    reference's source-availability filter (city-directories.js:196,
-  *    SURVEY.md O-24): a manifest row with no archive, or an archive not
-  *    in the manifest, produces no pages;
+  *  - the manifest is collected on the driver into a uuid → rows map
+  *    that rides the archive `flatMap`'s closure. The lookup doubles as
+  *    the reference's source-availability filter (city-directories.js:196,
+  *    SURVEY.md O-24), with an inner join's semantics: a manifest row
+  *    with no archive, or an archive not in the manifest, produces no
+  *    pages, and an archive listed twice is read once per row, each row
+  *    with its own page range. Not a `broadcast` join: a manifest is one
+  *    row per volume, and the join cost every run a driver-side
+  *    broadcast stage (with its adaptive re-plan) before the scan could
+  *    start;
   *  - the `startPage..endPage` body filter (city-directories.js:200) is
   *    pushed INTO the tar loop: non-matching entries are skipped before
   *    their bytes are slurped. The reference extracts whole volumes and
@@ -42,7 +48,7 @@ object HocrArchive {
   }
 
   /** Scan all volume archives under `archiveDir` that appear in `manifest`,
-    * emitting body pages only.
+    * emitting body pages only. `manifest` is collected here, once.
     */
   def readPages(spark: SparkSession, archiveDir: String,
                 manifest: Dataset[DirectoryMeta]): Dataset[PageRecord] = {
@@ -56,19 +62,16 @@ object HocrArchive {
       .select(
         regexp_extract(col("path"), "([^/]+)\\.tar\\.gz$", 1).as("uuid"),
         col("content"))
-    // availability filter (O-24) + metadata denormalization in one
-    // broadcast join: the manifest is tiny relative to the archives.
-    // explicit named select before the tuple decode: positional decode
-    // of the join output would silently transpose fields if
-    // DirectoryMeta's declaration order ever changed
-    val joined = archives
-      .join(broadcast(manifest.toDF()), Seq("uuid"), "inner")
-      .select("uuid", "content", "yearMin", "yearMax",
-        "startPage", "endPage", "columnCount")
-      .as[(String, Array[Byte], Int, Int, Int, Int, Int)]
-    joined.flatMap { case (uuid, bytes, yMin, yMax, sp, ep, cc) =>
-      readArchive(bytes, sp, ep).map { case (pageNum, imageId, pageUuid, hocr) =>
-        PageRecord(uuid, yMin, yMax, sp, ep, cc, pageNum, imageId, pageUuid, hocr)
+    // availability filter (O-24) + metadata denormalization
+    val rows: Map[String, Seq[DirectoryMeta]] =
+      manifest.collect().toSeq.groupBy(_.uuid)
+    archives.as[(String, Array[Byte])].flatMap { case (uuid, bytes) =>
+      rows.getOrElse(uuid, Nil).flatMap { m =>
+        readArchive(bytes, m.startPage, m.endPage).map {
+          case (pageNum, imageId, pageUuid, hocr) =>
+            PageRecord(uuid, m.yearMin, m.yearMax, m.startPage, m.endPage,
+              m.columnCount, pageNum, imageId, pageUuid, hocr)
+        }
       }
     }
   }

@@ -304,4 +304,59 @@ class GeocoderSpec extends SparkSpec {
     assert(Geocoder.fitsDriver(dim, maxIndexRows = 5L))
     assert(!Geocoder.fitsDriver(dim, maxIndexRows = 4L))
   }
+
+  test("GeoIndex survives Java serialization: every key answers as before") {
+    import graft.model.{GeoAddress, Geometry, GeoProperties, GeoRef, GeoResult}
+    val multi = Geometry("MultiPoint",
+      Seq(Seq(-74.01, 40.70), Seq(-73.99, 40.74), Seq(-73.98, 40.75)))
+    val rows = CityDirFixture.dimension ++ Seq(
+      // a key shared by three rows, listed out of id order: addr-d1 wins
+      GeoAddress("addr-d3", "9 Dup Place", "street-dup", "Dup Place",
+        "9 dup place", Geometry("Point", Seq(Seq(3.0, 3.0)))),
+      GeoAddress("addr-d1", "9 Dup Pl", "street-dup", "Dup Place",
+        "9 dup place", multi),
+      GeoAddress("addr-d2", "9 Dup Pl.", "street-dup", "Dup Place",
+        "9 dup place", Geometry("Point", Seq(Seq(2.0, 2.0)))),
+      GeoAddress("addr-m", "1 Multi Row", "street-multi", "Multi Row",
+        "1 multi row", multi),
+      GeoAddress("addr-n", null, "street-none", "No Geometry",
+        "2 no geometry", null),
+      GeoAddress("addr-c", "3 No Coords", "street-none", "No Coords",
+        "3 no coords", Geometry("Point", null)),
+      GeoAddress("addr-p", "4 Null Point", "street-none", "Null Point",
+        "4 null point", Geometry("MultiPoint", Seq(Seq(1.0, 2.0), null))))
+    val index = Geocoder.buildIndex(spark, spark.createDataset(rows)).value
+    val ser = new org.apache.spark.serializer.JavaSerializer(
+      spark.sparkContext.getConf).newInstance()
+    val copy = ser.deserialize[GeoIndex](ser.serialize(index))
+    assert(copy ne index)
+    val expected = rows.groupBy(_.normalizedKey).map { case (k, as) =>
+      val a = as.minBy(_.addressId)
+      k -> GeoResult(GeoProperties(GeoRef(a.addressId, a.addressName),
+        GeoRef(a.streetId, a.streetName)), a.geometry)
+    }
+    assert(index.size == expected.size && copy.size == expected.size)
+    expected.foreach { case (k, want) =>
+      assert(index.get(k).contains(want), k)
+      assert(copy.get(k).contains(want), k)
+    }
+    assert(copy.get("9 dup place").map(_.properties.address.id)
+      .contains("addr-d1"))
+    assert(copy.get("1 multi row").map(_.geometry).contains(multi))
+    assert(copy.get("123 broadway").map(_.geometry.coordinates)
+      .contains(Seq(Seq(-74.0104, 40.7069))))
+    Seq("", "9 dup", "123 broadway ", "nowhere special").foreach { k =>
+      assert(index.get(k).isEmpty && copy.get(k).isEmpty, k)
+    }
+  }
+
+  test("geocode's column type is the typed Seq[Geocoded] UDF's") {
+    val typed = spark.range(1).select(
+      udf((_: Long) => Seq.empty[graft.model.Geocoded]).apply(col("id")))
+      .schema.head.dataType
+    val lines = mkLines(Seq((1L, Seq("123 Broadway"))))
+    val got = Geocoder.geocode(lines, Geocoder.buildIndex(spark,
+      spark.createDataset(CityDirFixture.dimension))).schema("geocoded")
+    assert(got.dataType == typed)
+  }
 }
