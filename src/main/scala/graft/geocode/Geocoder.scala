@@ -1,7 +1,7 @@
 package graft.geocode
 
 import graft.model._
-import java.util.regex.Pattern
+import graft.parse.RegexChars
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.api.java.UDF1
@@ -44,45 +44,98 @@ object Geocoder {
 
   /** Address normalization (the fuzzy half of the reference's lunr
     * matching, done as deterministic canonicalization): lowercase, strip
-    * punctuation, collapse whitespace, expand the classic street
-    * abbreviations. Pure Column ops — codegen'd, usable on both the
-    * dimension and the fact side so the two agree.
+    * punctuation, drop a leading h/r home marker, expand the classic
+    * street abbreviations, collapse whitespace.
+    *
+    * Two forms share the constants below. The String form is the
+    * definition: the broadcast-index paths key every lookup through it,
+    * once per parsed address, so it is a hand-written two-pass kernel.
+    * The Column form applies the same steps as `regexp_replace` calls,
+    * so the join paths can normalize inside a codegen'd projection.
+    * `GeocoderSpec` asserts the two agree, Unicode word boundaries
+    * included, and `RegexKernelParitySpec` pins the String form to the
+    * regex form it replaced.
     */
-  /** SINGLE source of truth for the normalization rules — the Column and
-    * String implementations below both derive from these, so the
-    * broadcast-index paths and the join paths can never normalize the same
-    * address differently (the property spec asserts their agreement).
-    */
-  private val punctRe = "[.,;:']"
-  private val homeMarkerRe = "^[hr] +"
+  private val punctChars = ".,;:'"
   private[graft] val abbreviations: Seq[(String, String)] = Seq(
     "av" -> "avenue", "ave" -> "avenue", "st" -> "street",
     "bway" -> "broadway", "pl" -> "place", "rd" -> "road",
     "la" -> "lane", "ct" -> "court", "sq" -> "square",
     "w" -> "west", "e" -> "east", "n" -> "north", "s" -> "south")
+  private val expansions: Array[(String, String)] = abbreviations.toArray
 
   def normalizeAddress(c: Column): Column = {
     val lowered = lower(trim(c))
-    val noPunct = regexp_replace(lowered, punctRe, "")
+    val noPunct = regexp_replace(lowered, s"[$punctChars]", "")
     // leading h/r home-markers ("h 19 Pearl st") are not part of the address
-    val noMarker = regexp_replace(noPunct, homeMarkerRe, "")
+    val noMarker = regexp_replace(noPunct, "^[hr] +", "")
     val expanded = abbreviations.foldLeft(noMarker) {
       case (col, (ab, full)) => regexp_replace(col, s"\\b$ab\\b", full)
     }
     regexp_replace(expanded, "\\s+", " ")
   }
 
-  /** The String form's rules, compiled once: `String.replaceAll` would
-    * compile each of the 16 patterns again on every call. */
-  private lazy val stringRules: Seq[(Pattern, String)] =
-    ((punctRe -> "") +: (homeMarkerRe -> "") +:
-      abbreviations.map { case (ab, full) => s"\\b$ab\\b" -> full } :+
-      ("\\s+" -> " ")).map { case (re, to) => Pattern.compile(re) -> to }
-
-  def normalizeAddress(s: String): String =
-    stringRules.foldLeft(s.trim.toLowerCase) { case (x, (re, to)) =>
-      re.matcher(x).replaceAll(to)
+  /** The String form, equal to applying the Column form's steps in
+    * order. Pass one lowercases as `String.toLowerCase` does, drops the
+    * punctuation and then a leading `h`/`r` followed by spaces. Pass two
+    * expands every run of ASCII letters that is a whole regex word — no
+    * letter, digit, `_` or non-spacing mark on either side, a mark
+    * counting as part of the letter it follows — and is an abbreviation;
+    * all 13 expansions happen in this one pass because an expansion is
+    * never itself an abbreviation and leaves every other word's
+    * boundaries as they were. The same pass turns each run of ASCII
+    * whitespace into one space.
+    */
+  def normalizeAddress(s: String): String = {
+    val lowered = s.trim.toLowerCase
+    val kept = new Array[Char](lowered.length)
+    var n = 0
+    var i = 0
+    while (i < lowered.length) {
+      val c = lowered.charAt(i)
+      if (punctChars.indexOf(c) < 0) { kept(n) = c; n += 1 }
+      i += 1
     }
+    var from = 0
+    if (n > 1 && (kept(0) == 'h' || kept(0) == 'r') && kept(1) == ' ') {
+      from = 2
+      while (from < n && kept(from) == ' ') from += 1
+    }
+    val t = new String(kept, from, n - from)
+    val out = new java.lang.StringBuilder(t.length + 8)
+    i = 0
+    while (i < t.length) {
+      val c = t.charAt(i)
+      if (isAsciiLower(c)) {
+        var j = i + 1
+        while (j < t.length && isAsciiLower(t.charAt(j))) j += 1
+        val full =
+          if (RegexChars.endsWord(t, i) || RegexChars.continuesWord(t, j)) null
+          else expansion(t, i, j)
+        if (full != null) out.append(full) else out.append(t, i, j)
+        i = j
+      } else {
+        if (!RegexChars.isSpace(c)) out.append(c)
+        else if (out.length == 0 || out.charAt(out.length - 1) != ' ')
+          out.append(' ')
+        i += 1
+      }
+    }
+    out.toString
+  }
+
+  private def isAsciiLower(c: Char): Boolean = c >= 'a' && c <= 'z'
+
+  /** The expansion of the abbreviation `t[from, to)`, or null. */
+  private def expansion(t: String, from: Int, to: Int): String = {
+    var k = 0
+    while (k < expansions.length) {
+      val (ab, full) = expansions(k)
+      if (ab.length == to - from && t.startsWith(ab, from)) return full
+      k += 1
+    }
+    null
+  }
 
   /** One row per normalizedKey: duplicate keys resolve deterministically
     * to the MIN addressId — the rule the join variants apply too, so all

@@ -36,14 +36,11 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object EntryParser {
 
-  private val streetWords: Set[String] = Set(
+  private[graft] val streetWords: Set[String] = Set(
     "st", "street", "av", "ave", "avenue", "bway", "broadway", "pl",
     "place", "rd", "road", "la", "lane", "ct", "court", "sq", "square",
     "row", "alley", "bowery", "blvd", "boulevard", "ter", "terrace",
     "dr", "drive", "pk", "park", "slip", "wharf", "pier", "mkt", "market")
-
-  private val houseNumRe = "^\\d+([\\s,].*)?$".r
-  private val homeMarkerRe = "^(h|r|h\\.|r\\.)\\s+\\d.*".r
 
   /** Street designators that are ALSO real one-word street names in the
     * corpus ("Bowery", "Broadway"): a bare segment of one of these is a
@@ -92,18 +89,54 @@ object EntryParser {
   def isAddress(segment: String): Boolean =
     isAddress(segment, defaultStandaloneStreets)
 
+  /** The address test on one segment, after `trim` and `toLowerCase`
+    * (whitespace is ASCII `\s`: space, tab, LF, VT, FF, CR; digits are
+    * ASCII `0`–`9`; a line terminator is LF, CR, U+0085, U+2028 or
+    * U+2029). A segment is an address if it is
+    *  - a house number: digits, then either nothing or a whitespace
+    *    character or comma followed by text with no line terminator
+    *    ("12 Broadway", "12,");
+    *  - home-marked: `h`, `r`, `h.` or `r.`, whitespace, then a digit
+    *    followed by text with no line terminator ("h 45 Broadway");
+    *  - or a street: split into words at runs of whitespace and `.`, its
+    *    last word is a street designator, and either another word comes
+    *    before it or the designator is in `standalone`.
+    */
   def isAddress(segment: String, standalone: Set[String]): Boolean = {
     val s = segment.trim.toLowerCase
     if (s.isEmpty) false
-    else if (houseNumRe.pattern.matcher(s).matches) true
-    else if (homeMarkerRe.pattern.matcher(s).matches) true
+    else if (isHouseNumber(s) || isHomeMarked(s)) true
     else {
-      val words = s.split("[\\s.]+").filter(_.nonEmpty)
-      val lastWord = words.lastOption.getOrElse("")
+      var end = s.length
+      while (end > 0 && isWordBreak(s.charAt(end - 1))) end -= 1
+      var start = end
+      while (start > 0 && !isWordBreak(s.charAt(start - 1))) start -= 1
+      val lastWord = s.substring(start, end)
       if (!streetWords.contains(lastWord)) false
-      else words.length > 1 || standalone.contains(lastWord)
+      else (0 until start).exists(i => !isWordBreak(s.charAt(i))) ||
+        standalone.contains(lastWord)
     }
   }
+
+  private def isWordBreak(c: Char): Boolean =
+    c == '.' || RegexChars.isSpace(c)
+
+  private def isHouseNumber(s: String): Boolean = {
+    var i = 0
+    while (i < s.length && RegexChars.isDigit(s.charAt(i))) i += 1
+    i > 0 && (i == s.length ||
+      ((RegexChars.isSpace(s.charAt(i)) || s.charAt(i) == ',') &&
+        RegexChars.noLineTerminatorFrom(s, i + 1)))
+  }
+
+  private def isHomeMarked(s: String): Boolean =
+    (s.charAt(0) == 'h' || s.charAt(0) == 'r') && {
+      var i = if (s.length > 1 && s.charAt(1) == '.') 2 else 1
+      val spaces = i
+      while (i < s.length && RegexChars.isSpace(s.charAt(i))) i += 1
+      i > spaces && i < s.length && RegexChars.isDigit(s.charAt(i)) &&
+        RegexChars.noLineTerminatorFrom(s, i + 1)
+    }
 
   /** Parse one OCR entry line into the contract shape. Never throws;
     * degenerate input yields empty arrays (the reference's CRF likewise

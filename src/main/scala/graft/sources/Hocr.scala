@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.model.OcrLine
-import scala.util.matching.Regex
+import graft.parse.RegexChars
 
 /** hOCR (XHTML OCR output) page parsing + column detection.
   *
@@ -15,54 +15,223 @@ import scala.util.matching.Regex
   * filtered out downstream (city-directories.js:236); pages where
   * detection fails yield None (filtered at city-directories.js:233).
   *
-  * Parsing is regex-based rather than a DOM parse: hOCR in the wild is
-  * only nominally XHTML, and per-line regex scanning is allocation-light —
-  * this code runs inside a `flatMap` on executors for every page of a
-  * 100 TB corpus, so no DOM trees.
+  * Parsing is one hand-written left-to-right scan per page rather than a
+  * DOM parse or a set of regexes: hOCR in the wild is only nominally
+  * XHTML, and this code runs inside a `flatMap` on executors for every
+  * page of a 100 TB corpus, so no DOM trees and no regex engine. The scan
+  * keeps the output the regex form defined, rule for rule (that form
+  * stays in the tests as `graft.parse.RegexOracles`) — see [[parseLines]].
   */
 object Hocr {
-
-  /** Start tag of an `ocr_line` element — attribute order and quote style
-    * vary. Lines are extracted by sequential scanning between consecutive
-    * line start-tags (hOCR lines are laid out sequentially), which copes
-    * with nested `ocrx_word` spans without needing balanced-tag parsing.
-    */
-  private val lineStartRe: Regex =
-    """<(?:span|div|p)\b[^>]*class=['"][^'"]*ocr_line[^'"]*['"][^>]*>""".r
-  private val titleAttrRe: Regex =
-    """title=['"]([^'"]*)['"]""".r
-  private val bboxRe: Regex =
-    """bbox (\d+) (\d+) (\d+) (\d+)""".r
-  private val tagRe: Regex = "<[^>]+>".r
-  private val wsRe: Regex = "\\s+".r
 
   /** Raw parsed line before column assignment. */
   final case class RawLine(bbox: Array[Int], text: String)
 
+  /** The page's OCR lines, in document order. The rules:
+    *  - a line starts at a start tag of a `span`, `div` or `p` element
+    *    (the name ends at a regex word boundary) whose `class=` value,
+    *    quoted with `'` or `"`, contains `ocr_line`; attribute order and
+    *    quote style vary, and when a tag has several `class=` attributes
+    *    the last one before the tag's first `>` that qualifies counts.
+    *    The tag ends at the first `>` after that value. Start tags are
+    *    found left to right without overlapping;
+    *  - a line's content runs to the next line start tag, or to the end
+    *    of the page: hOCR lines are laid out sequentially, so nested
+    *    `ocrx_word` spans need no balanced-tag parsing;
+    *  - the bbox is read from the tag's first quoted `title=` value, at
+    *    its first `bbox` followed by four space-separated ASCII numbers;
+    *    a coordinate that does not fit an `Int` leaves the line without
+    *    a bbox;
+    *  - in the text, each `<…>` (at least one character, no `>` inside)
+    *    becomes a space, the five entities `&lt;` `&gt;` `&quot;` `&#39;`
+    *    `&amp;` are decoded in one pass (so `&amp;lt;` stays `&lt;`),
+    *    each run of ASCII whitespace becomes one space, and the result is
+    *    trimmed as `String.trim` does (the reference's `completeText`);
+    *  - a line with no bbox or with empty text is dropped.
+    */
   def parseLines(hocr: String): Seq[RawLine] = {
-    // The line element's own title holds the line bbox; inner ocrx_word
-    // spans are stripped and their texts joined (reference `completeText`).
-    val starts = lineStartRe.findAllMatchIn(hocr).toVector
-    starts.zipWithIndex.flatMap { case (m, i) =>
-      val contentEnd =
-        if (i + 1 < starts.length) starts(i + 1).start else hocr.length
-      val inner = hocr.substring(m.end, contentEnd)
-      val bbox = titleAttrRe.findFirstMatchIn(m.matched)
-        .flatMap(t => bboxRe.findFirstMatchIn(t.group(1)))
-        .map(b => Array(b.group(1).toInt, b.group(2).toInt,
-                        b.group(3).toInt, b.group(4).toInt))
-      val text = wsRe.replaceAllIn(
-        unescape(tagRe.replaceAllIn(inner, " ")), " ").trim
-      bbox.filter(_ => text.nonEmpty).map(RawLine(_, text))
+    val lines = Vector.newBuilder[RawLine]
+    val text = new java.lang.StringBuilder
+    var tag = nextLineTag(hocr, 0)
+    while (tag >= 0) {
+      val start = (tag >>> 32).toInt
+      val end = tag.toInt
+      val next = nextLineTag(hocr, end)
+      val contentEnd = if (next >= 0) (next >>> 32).toInt else hocr.length
+      val bbox = titleBbox(hocr, start, end)
+      if (bbox != null) {
+        lineText(hocr, end, contentEnd, text)
+        if (text.length > 0) lines += RawLine(bbox, text.toString)
+      }
+      tag = next
     }
+    lines.result()
   }
 
-  // &amp; must be unescaped LAST: doing it first turns a literal
-  // "&amp;lt;" into "&lt;" and then (wrongly) into "<"
-  private def unescape(s: String): String =
-    s.replace("&lt;", "<").replace("&gt;", ">")
-      .replace("&quot;", "\"").replace("&#39;", "'")
-      .replace("&amp;", "&")
+  /** The next line start tag at or after `from`, packed as
+    * `start << 32 | end` (end exclusive), or -1.
+    */
+  private def nextLineTag(s: String, from: Int): Long = {
+    var p = s.indexOf('<', from)
+    while (p >= 0) {
+      val end = lineTagEnd(s, p)
+      if (end >= 0) return (p.toLong << 32) | end
+      p = s.indexOf('<', p + 1)
+    }
+    -1L
+  }
+
+  /** End (exclusive) of the line start tag opening at `p`, or -1. */
+  private def lineTagEnd(s: String, p: Int): Int = {
+    val nameLen =
+      if (s.startsWith("span", p + 1)) 4
+      else if (s.startsWith("div", p + 1)) 3
+      else if (s.startsWith("p", p + 1)) 1
+      else return -1
+    val nameEnd = p + 1 + nameLen
+    if (RegexChars.continuesWord(s, nameEnd)) return -1
+    val firstGt = s.indexOf('>', nameEnd)
+    if (firstGt < 0) return -1
+    // from the last `class=` whose opening quote still sits before firstGt
+    var x = firstGt - 7
+    while (x >= nameEnd) {
+      val open = x + 6
+      if (s.startsWith("class=", x) && isQuote(s.charAt(open))) {
+        val close = indexOfQuote(s, open + 1, s.length)
+        if (close >= 0 && indexOf(s, "ocr_line", open + 1, close) >= 0) {
+          val gt = s.indexOf('>', close + 1)
+          if (gt >= 0) return gt + 1
+        }
+      }
+      x -= 1
+    }
+    -1
+  }
+
+  /** The bbox of the tag `s[start, end)`, or null. */
+  private def titleBbox(s: String, start: Int, end: Int): Array[Int] = {
+    var t = indexOf(s, "title=", start, end)
+    while (t >= 0) {
+      val open = t + 6
+      if (open < end && isQuote(s.charAt(open))) {
+        val close = indexOfQuote(s, open + 1, end)
+        if (close >= 0) return bbox(s, open + 1, close)
+      }
+      t = indexOf(s, "title=", t + 1, end)
+    }
+    null
+  }
+
+  /** The first `bbox d d d d` in `s[from, to)`, or null if there is none
+    * or one of its numbers does not fit an `Int`.
+    */
+  private def bbox(s: String, from: Int, to: Int): Array[Int] = {
+    var b = indexOf(s, "bbox ", from, to)
+    while (b >= 0) {
+      val coords = new Array[Int](4)
+      var i = b + 5
+      var k = 0
+      var overflow = false
+      var ok = true
+      while (ok && k < 4) {
+        var v = 0L
+        val digits = i
+        while (i < to && RegexChars.isDigit(s.charAt(i))) {
+          if (!overflow) {
+            v = v * 10 + (s.charAt(i) - '0')
+            overflow = v > Int.MaxValue
+          }
+          i += 1
+        }
+        ok = i > digits && (k == 3 || (i < to && s.charAt(i) == ' '))
+        coords(k) = v.toInt
+        i += 1
+        k += 1
+      }
+      if (ok) return if (overflow) null else coords
+      b = indexOf(s, "bbox ", b + 1, to)
+    }
+    null
+  }
+
+  /** Sets `out` to the text of the content `s[from, to)`. */
+  private def lineText(s: String, from: Int, to: Int,
+                       out: java.lang.StringBuilder): Unit = {
+    out.setLength(0)
+    var gt = Int.MinValue // first '>' at or after the scan, -1 if none
+    var i = from
+    while (i < to) {
+      val c = s.charAt(i)
+      if (c == '<') {
+        if (gt != -1 && gt <= i) gt = indexOf(s, '>', i + 1, to)
+        if (gt > i + 1) { space(out); i = gt + 1 }
+        else { out.append(c); i += 1 }
+      } else if (c == '&') {
+        i = entity(s, i, to, out)
+      } else if (RegexChars.isSpace(c)) {
+        space(out); i += 1
+      } else {
+        out.append(c); i += 1
+      }
+    }
+    var a = 0
+    var b = out.length
+    while (b > 0 && out.charAt(b - 1) <= ' ') b -= 1
+    while (a < b && out.charAt(a) <= ' ') a += 1
+    out.setLength(b)
+    out.delete(0, a)
+  }
+
+  private val entities: Array[(String, Char)] = Array(
+    "&lt;" -> '<', "&gt;" -> '>', "&quot;" -> '"', "&#39;" -> '\'',
+    "&amp;" -> '&')
+
+  /** Appends the entity or the `&` at `i`; returns the index after it. */
+  private def entity(s: String, i: Int, to: Int,
+                     out: java.lang.StringBuilder): Int = {
+    var k = 0
+    while (k < entities.length) {
+      val (name, ch) = entities(k)
+      if (i + name.length <= to && s.startsWith(name, i)) {
+        out.append(ch)
+        return i + name.length
+      }
+      k += 1
+    }
+    out.append('&')
+    i + 1
+  }
+
+  /** A whitespace run or a tag: at most one space, none leading. */
+  private def space(out: java.lang.StringBuilder): Unit =
+    if (out.length > 0 && out.charAt(out.length - 1) != ' ') out.append(' ')
+
+  private def isQuote(c: Char): Boolean = c == '\'' || c == '"'
+
+  private def indexOfQuote(s: String, from: Int, to: Int): Int = {
+    var i = from
+    while (i < to) {
+      if (isQuote(s.charAt(i))) return i
+      i += 1
+    }
+    -1
+  }
+
+  private def indexOf(s: String, c: Char, from: Int, to: Int): Int = {
+    val i = s.indexOf(c, from)
+    if (i >= 0 && i < to) i else -1
+  }
+
+  /** First index of `needle` wholly inside `s[from, to)`, or -1. */
+  private def indexOf(s: String, needle: String, from: Int, to: Int): Int = {
+    var i = from
+    val last = to - needle.length
+    while (i <= last) {
+      if (s.startsWith(needle, i)) return i
+      i += 1
+    }
+    -1
+  }
 
   /** Detect `columnCount` columns from the distribution of line left edges
     * and assign each line a column index.

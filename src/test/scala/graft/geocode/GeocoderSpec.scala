@@ -11,7 +11,11 @@ class GeocoderSpec extends SparkSpec {
     val samples = Seq(
       "123 Broadway", "45 W 23d st", "h 19 Pearl st.", "r 7 Bowery",
       "88 Canal St", "3 Maiden lane", "  201  Water st  ", "5 E 14th av",
-      "Smith's alley", "10 N Moore st")
+      "Smith's alley", "10 N Moore st",
+      // regex word boundaries: Unicode letters and digits, `_` and
+      // combining marks next to an abbreviation
+      "\u00e9 st", "st_", "9st", "s\u0301t", "st\u0301", "\u0663 st",
+      "_st w", "x\u0301 n", "\u00e9 \u0301st", "12 \u00e9st e")
     val viaCol = samples.toDF("a")
       .select(Geocoder.normalizeAddress(col("a"))).as[String].collect().toSeq
     assert(viaCol == samples.map(Geocoder.normalizeAddress))
@@ -19,7 +23,8 @@ class GeocoderSpec extends SparkSpec {
 
   test("normalizeAddress property: agreement on random address-ish strings") {
     val words = Vector("st", "av", "W", "Pearl", "h", "123", "broadway.",
-      "E", "14th", "lane", "", "  ", "r", "St.", "AV")
+      "E", "14th", "lane", "", "  ", "r", "St.", "AV", "\u00e9", "st_",
+      "9st", "s\u0301t", "\u0301", "\u0663")
     val rnd = new scala.util.Random(42) // deterministic
     val addrs = Seq.fill(60)(
       Seq.fill(4)(words(rnd.nextInt(words.size))).mkString(" "))

@@ -31,6 +31,16 @@ class HocrSpec extends AnyFunSuite {
     assert(lines.head.text == "Smith John")
   }
 
+  test("parseLines drops a line whose bbox does not fit an Int, keeps the rest") {
+    assert(Hocr.parseLines(
+      "<span class='ocr_line' title='bbox 1 2 3 99999999999'>x</span>").isEmpty)
+    val lines = Hocr.parseLines(
+      "<span class='ocr_line' title='bbox 2147483648 2 3 4'>x</span>" +
+      "<span class='ocr_line' title='bbox 1 2 3 2147483647'>y</span>")
+    assert(lines.map(_.text) == Seq("y"))
+    assert(lines.head.bbox.sameElements(Array(1, 2, 3, Int.MaxValue)))
+  }
+
   test("detectColumns: two columns, indented line unassigned") {
     val detected = Hocr.detectPage(page, 2)
     assert(detected.isDefined)
