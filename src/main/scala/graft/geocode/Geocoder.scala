@@ -64,8 +64,12 @@ object Geocoder {
     "w" -> "west", "e" -> "east", "n" -> "north", "s" -> "south")
   private val expansions: Array[(String, String)] = abbreviations.toArray
 
+  /** What `String.trim` removes at either end: every char up to U+0020
+    * (Spark's one-argument `trim` removes only the space itself). */
+  private val trimmedChars = (0 to 0x20).map(_.toChar).mkString
+
   def normalizeAddress(c: Column): Column = {
-    val lowered = lower(trim(c))
+    val lowered = lower(trim(c, trimmedChars))
     val noPunct = regexp_replace(lowered, s"[$punctChars]", "")
     // leading h/r home-markers ("h 19 Pearl st") are not part of the address
     val noMarker = regexp_replace(noPunct, "^[hr] +", "")

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.functions._
 import graft.Ckpt.CkptOps
 
@@ -552,7 +553,9 @@ object GraphOps {
     frontiers += frontier
     var seen = frontier: DataFrame
     var hop = 0
-    while (frontierN > 0) {
+    // a throw (the drain require, a failed job) frees the frontiers made
+    // so far: no caller holds a handle to them yet
+    try while (frontierN > 0) {
       hop += 1
       require(hop <= maxHops,
         s"reachFromSeedsTagged: frontier not drained after $maxHops hops" +
@@ -571,6 +574,8 @@ object GraphOps {
         seen = seen.unionByName(reached)
         frontier = reached
       }
+    } catch {
+      case t: Throwable => frontiers.foreach(graft.Release(_)); throw t
     }
     (seen, () => frontiers.foreach(graft.Release(_)))
   }
@@ -592,15 +597,66 @@ object GraphOps {
       r
     }
 
+  /** Runs `a` on a second driver thread while `b` runs on this one: two
+    * independent materializations overlap, so the wall cost is the
+    * slower side, not the sum. Both sides are joined whatever
+    * happens, so no background job outlives its caller. A throw is
+    * rethrown, with the other side's error, if any, added as
+    * suppressed; each side registers what it checkpoints in the
+    * caller's [[Held]], which frees the side that did materialize.
+    */
+  private def overlap[A, B](a: => A, b: => B): (A, B) = {
+    val fa = new java.util.concurrent.FutureTask[A](() => a)
+    scala.concurrent.ExecutionContext.global.execute(fa)
+    val rb: Either[Throwable, B] =
+      try Right(b) catch { case t: Throwable => Left(t) }
+    val ra: Either[Throwable, A] = try Right(fa.get()) catch {
+      case x: java.util.concurrent.ExecutionException => Left(x.getCause)
+      case t: Throwable => Left(t)
+    }
+    (ra, rb) match {
+      case (Right(x), Right(y)) => (x, y)
+      case _ =>
+        val errs = Seq(rb, ra).collect { case Left(t) => t }
+        errs.tail.foreach(t => if (t ne errs.head) errs.head.addSuppressed(t))
+        throw errs.head
+    }
+  }
+
+  /** What one operator call has checkpointed, so that a throw anywhere
+    * in it frees all of it (see [[held]]). [[graft.Release]] is
+    * idempotent, so a frame the loop already freed is a no-op.
+    * Registration is thread-safe, for [[overlap]]'s second thread. */
+  private final class Held {
+    private val rels =
+      new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]()
+    def apply(df: DataFrame): DataFrame = {
+      rels.add(() => graft.Release(df)); df
+    }
+    def counted(p: (DataFrame, Long)): (DataFrame, Long) = { apply(p._1); p }
+    def handle(p: (DataFrame, () => Unit)): (DataFrame, () => Unit) = {
+      rels.add(p._2); p
+    }
+    def releaseAll(): Unit = rels.forEach(_())
+  }
+
+  /** Runs an operator body; if it throws, everything it registered in
+    * its [[Held]] is released before the error propagates. */
+  private def held[A](body: Held => A): A = {
+    val h = new Held
+    try body(h) catch { case t: Throwable => h.releaseAll(); throw t }
+  }
+
   /** Strongly connected components of a DIRECTED edge frame — the
     * web-graph dedup workhorse (mirror rings, link farms, mutually-
     * citing template families are SCCs; mere co-linking is not).
     * Output: (id, scc) for every edge endpoint, `scc` = the MIN id in
     * the component (deterministic, engine-independent).
     *
-    * Algorithm: FB-Trim (forward-backward reachability with trimming,
-    * the standard distributed SCC decomposition — Slota et al. 2014,
-    * Orzan's coloring family), driven as a DataFrame loop:
+    * Algorithm: Multistep (Slota et al. 2014) — FB-Trim (forward-
+    * backward reachability with trimming, the standard distributed SCC
+    * decomposition, Orzan's coloring family) finished serially once
+    * the remaining problem is small, driven as a DataFrame loop:
     *
     *  1. TRIM, repeatedly: a node with no in-edge or no out-edge in
     *     the REMAINING subgraph can sit in no cycle — it is a
@@ -608,23 +664,33 @@ object GraphOps {
     *     round, so bow-tie tendrils (the BULK of a web graph: IN/OUT
     *     pages, dead ends) drain in a few rounds at any scale,
     *     without ever paying a reachability pass.
-    *  2. PIVOT, one per REGION per round (parallel FB): regions seed
-    *     as the weak components of the trimmed core and refine by the
-    *     FB theorem (F\SCC / B\SCC / remainder) after each round;
-    *     forward-reach ∩ backward-reach from each region's min id IS
-    *     that pivot's SCC ([[reachFromSeedsTagged]] both ways on the
-    *     trimmed subgraph; the frontier-size dispatch broadcasts
-    *     small wavefronts). Assign, subtract, re-trim.
+    *  2. FINISH, when the trimmed remainder holds at most
+    *     [[SccLocalFinishMaxEdges]] edges: collect them and label every
+    *     remaining node with an iterative Tarjan on the driver. At the
+    *     trim fixpoint every remaining node has an in- and an out-edge,
+    *     and after a pivot round the edges are intra-region only (no
+    *     SCC crosses regions), so the collected edges are the whole
+    *     remaining problem. A pivot round is dozens of tiny driver-
+    *     synchronous jobs whatever the core's size; on a small core
+    *     the collect and the serial pass cost a fraction of one round
+    *     (PERF.md "SCC serial finish").
+    *  3. Otherwise PIVOT, one per REGION per round (parallel FB):
+    *     regions seed as the weak components of the trimmed core and
+    *     refine by the FB theorem (F\SCC / B\SCC / remainder) after
+    *     each round; forward-reach ∩ backward-reach from each region's
+    *     min id IS that pivot's SCC ([[reachFromSeedsTagged]] both
+    *     ways on the trimmed subgraph; the frontier-size dispatch
+    *     broadcasts small wavefronts). Assign, subtract, re-trim.
     *
-    * Scale shape: every step is an equi/anti join or a distinct on id
-    * — no windows, no collects except the single-scalar pivot min.
-    * Superseded generations are localCheckpointed and released (the
-    * kcore discipline), so state is O(remaining + assigned). Rounds:
-    * trim rounds are bounded by the longest tendril CHAIN, pivot
-    * rounds by the DEPTH of the FB recursion (disconnected families
-    * all resolve in round 1 off the weak-component seeding; a bow-tie
-    * graph needs one round for the giant plus the refinement tail) —
-    * both guarded by loud `require`s, never silent truncation. A
+    * Scale shape: every distributed step is an equi/anti join or a
+    * distinct on id — no windows, no collects except the bounded
+    * finish. Superseded generations are localCheckpointed and released
+    * (the kcore discipline), so state is O(remaining + assigned), and
+    * a call that throws releases what it made. Rounds: trim rounds are
+    * bounded by the longest tendril CHAIN, pivot rounds by the DEPTH
+    * of the FB recursion above the finish bound (disconnected families
+    * all resolve in round 1 off the weak-component seeding) — both
+    * guarded by loud `require`s, never silent truncation. A
     * condensation that is one long path of big SCCs inside one weak
     * component is the documented worst case (one pivot per round),
     * the same trade every published FB-trim makes.
@@ -639,7 +705,22 @@ object GraphOps {
     * final assigned checkpoint. */
   def stronglyConnectedComponentsReleasable(edges: DataFrame,
       maxPivotRounds: Int, maxHops: Int, maxTrimRounds: Int = 64)
-      : (DataFrame, () => Unit) = {
+      : (DataFrame, () => Unit) =
+    sccReleasable(edges, maxPivotRounds, maxHops, maxTrimRounds)
+
+  /** The most remaining edges the SCC loop finishes on the driver
+    * instead of running another pivot round. Sized from the measured
+    * collect + Tarjan cost against one pivot round's (PERF.md "SCC
+    * serial finish"). */
+  private[graft] val SccLocalFinishMaxEdges = 100000L
+
+  /** [[stronglyConnectedComponentsReleasable]] with the finish bound
+    * open: a negative `localFinishMaxEdges` forces the distributed
+    * path, a small one runs pivot rounds before the finish. */
+  private[graft] def sccReleasable(edges: DataFrame, maxPivotRounds: Int,
+      maxHops: Int, maxTrimRounds: Int = 64,
+      localFinishMaxEdges: Long = SccLocalFinishMaxEdges)
+      : (DataFrame, () => Unit) = held { h =>
     val ser = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
     val rawE = edges.select(col("a").cast("long").as("a"),
       col("b").cast("long").as("b"))
@@ -647,13 +728,16 @@ object GraphOps {
     // in scc(a)), so the working edge set drops them to keep the trim
     // rule exact — but the NODE set must come from the raw endpoints:
     // a page whose only links are self-links (common in web graphs) is
-    // still a valid singleton SCC member of the output contract
-    var e = rawE.filter(col("a") =!= col("b")).distinct()
-      .iterCkpt(ser)
-    // checkpoint + count fold: one job (Ckpt.counted, r19)
-    var (nodes, remN) = rawE.select(col("a").as("id"))
-      .unionByName(rawE.select(col("b").as("id"))).distinct()
-      .iterCkptCounted(ser)
+    // still a valid singleton SCC member of the output contract.
+    // Every edge checkpoint is counted (one job either way), so the
+    // finish dispatch needs no job of its own. Edges and nodes are
+    // independent materializations of the input: overlapped.
+    var ((e, eN), (nodes, remN)) = overlap(
+      h.counted(rawE.filter(col("a") =!= col("b")).distinct()
+        .iterCkptCounted(ser)),
+      h.counted(rawE.select(col("a").as("id"))
+        .unionByName(rawE.select(col("b").as("id"))).distinct()
+        .iterCkptCounted(ser)))
     // assigned components accumulate as a BUFFER of checkpointed
     // parts unioned lazily at the end — re-checkpointing the growing
     // union per round is the same O(n·rounds) rewrite reachFrom
@@ -696,72 +780,73 @@ object GraphOps {
         traced(s"trim round $tr") {
         val core = e.select(col("a").as("id")).distinct()
           .join(e.select(col("b").as("id")).distinct(), Seq("id"))
-        val (singles, nSingles) = nodes.join(core, Seq("id"), "left_anti")
-          .withColumn("scc", col("id")).iterCkptCounted(ser)
+        val (singles, nSingles) = h.counted(
+          nodes.join(core, Seq("id"), "left_anti")
+            .withColumn("scc", col("id")).iterCkptCounted(ser))
         if (nSingles == 0) { trimming = false; graft.Release(singles) }
         else {
           parts += singles
           val ids = singles.select("id")
           // independent materializations off the same parents —
-          // overlap them (guide §2.6); release the parents only after
-          // BOTH successors are materialized
-          val e2F = scala.concurrent.Future(e
-            .join(ids.withColumnRenamed("id", "a"), Seq("a"), "left_anti")
-            .join(ids.withColumnRenamed("id", "b"), Seq("b"), "left_anti")
-            .iterCkpt(ser))(scala.concurrent.ExecutionContext.global)
-          val n2 = nodes.join(ids, Seq("id"), "left_anti")
-            .iterCkpt(ser)
-          val e2 = scala.concurrent.Await.result(e2F,
-            scala.concurrent.duration.Duration.Inf)
+          // overlap them; release the parents only after BOTH
+          // successors are materialized
+          val ((e2, e2N), n2) = overlap(
+            h.counted(e
+              .join(ids.withColumnRenamed("id", "a"), Seq("a"), "left_anti")
+              .join(ids.withColumnRenamed("id", "b"), Seq("b"), "left_anti")
+              .iterCkptCounted(ser)),
+            h(nodes.join(ids, Seq("id"), "left_anti").iterCkpt(ser)))
           graft.Release(nodes); graft.Release(e)
-          nodes = n2; e = e2
+          nodes = n2; e = e2; eN = e2N
           remN = remN - nSingles
         }
         }
       }
-      if (remN > 0) {
+      if (remN > 0 && eN <= localFinishMaxEdges) {
+        // Multistep finish: the remaining edges are the whole remaining
+        // problem (see the scaladoc), small enough to label serially
+        parts += h(traced("local finish")(sccLocalPart(e, ser)))
+        remN = 0
+      } else if (remN > 0) {
         pivots += 1
         require(pivots <= maxPivotRounds,
           s"SCC pivot rounds exceeded $maxPivotRounds — the condensation " +
             "has deeper FB recursion than the cap; raise maxPivotRounds")
         if (regNodes == null) {
           // seed: one region per weak component of the trimmed core
-          val (cc, relCc) = traced("cc seeding")(
-            DedupOps.clustersAutoReleasable(e))
-          regNodes = traced("regNodes ckpt")(nodes.join(
+          val (cc, relCc) = h.handle(traced("cc seeding")(
+            DedupOps.clustersAutoReleasable(e)))
+          regNodes = h(traced("regNodes ckpt")(nodes.join(
             cc.select(col("member").as("id"), col("cluster_rep").as("reg")),
-            Seq("id")).iterCkpt(ser))
+            Seq("id")).iterCkpt(ser)))
           relCc()
         } else {
           // trim since last round may have removed region members
-          val rn = regNodes.join(nodes, Seq("id")).iterCkpt(ser)
+          val rn = h(regNodes.join(nodes, Seq("id")).iterCkpt(ser))
           graft.Release(regNodes); regNodes = rn
         }
         // pivot = min id per region: a 2-column aggregate, no collect.
         // pid IS its SCC's min (pid ∈ its SCC ⊆ its region, and pid is
         // the region min), preserving the output contract.
-        val pvts = traced("pivot agg")(regNodes.groupBy(col("reg"))
-          .agg(min(col("id")).as("pid")).iterCkpt(ser))
+        val pvts = h(traced("pivot agg")(regNodes.groupBy(col("reg"))
+          .agg(min(col("id")).as("pid")).iterCkpt(ser)))
         val seeds = pvts.select(col("pid").as("id"), col("reg"))
         // the two reaches are INDEPENDENT BFS loops over the same
-        // materialized edge checkpoint — overlap them on two driver
-        // threads (guide §2.6) so the wall cost is max(fwd, bwd), not
-        // the sum: each loop is a chain of tiny driver-synchronous
-        // frontier jobs whose tasks nowhere near fill the executors,
-        // and the results are deterministic regardless of interleaving
-        // (disjoint checkpoints, no shared mutable state).
-        val bwdF = scala.concurrent.Future(traced("bwd reach")(
-          reachFromSeedsTagged(
-            e.select(col("b").as("a"), col("a").as("b")), seeds, maxHops)))(
-          scala.concurrent.ExecutionContext.global)
-        val (fwd, relF) = traced("fwd reach")(
-          reachFromSeedsTagged(e, seeds, maxHops))
-        val (bwd, relB) = scala.concurrent.Await.result(bwdF,
-          scala.concurrent.duration.Duration.Inf)
-        val scc = traced("scc ckpt")(fwd.join(bwd.select("id"), Seq("id"))
+        // materialized edge checkpoint — overlapped, so the wall cost
+        // is max(fwd, bwd), not the sum: each loop is a chain of tiny
+        // driver-synchronous frontier jobs whose tasks nowhere near
+        // fill the executors, and the results are deterministic
+        // regardless of interleaving (disjoint checkpoints, no shared
+        // mutable state).
+        val ((bwd, relB), (fwd, relF)) = overlap(
+          h.handle(traced("bwd reach")(reachFromSeedsTagged(
+            e.select(col("b").as("a"), col("a").as("b")), seeds, maxHops))),
+          h.handle(traced("fwd reach")(
+            reachFromSeedsTagged(e, seeds, maxHops))))
+        val scc = h(traced("scc ckpt")(fwd.join(bwd.select("id"), Seq("id"))
           .join(pvts, Seq("reg"))
           .select(col("id"), col("pid").as("scc"))
-          .iterCkpt(ser))
+          .iterCkpt(ser)))
         parts += scc
         // FB refinement of the remaining nodes; relabel by min id so
         // region labels never grow past a long
@@ -777,30 +862,28 @@ object GraphOps {
         val classed = fOnly.unionByName(bOnly).unionByName(rest)
         val relabel = classed.groupBy(col("reg"), col("k"))
           .agg(min(col("id")).as("nreg"))
-        val regNext = classed.join(relabel, Seq("reg", "k"))
-          .select(col("id"), col("nreg").as("reg")).iterCkpt(ser)
+        val regNext = h(classed.join(relabel, Seq("reg", "k"))
+          .select(col("id"), col("nreg").as("reg")).iterCkpt(ser))
         relF(); relB(); graft.Release(pvts)
         // subtract assigned nodes; rebuild edges INTRA-REGION only
         // (regNext covers exactly the unassigned nodes, so the join
-        // also drops assigned endpoints — no separate anti join)
-        // checkpoint + count fold: one job (Ckpt.counted, r19);
-        // node subtract and edge rebuild are independent — overlap
-        // (guide §2.6), release parents only after both materialize
-        val e2F = scala.concurrent.Future(traced("pivot edge rebuild")(e
-          .join(regNext.select(col("id").as("a"), col("reg").as("rega")),
-            Seq("a"))
-          .join(regNext.select(col("id").as("b"), col("reg").as("regb")),
-            Seq("b"))
-          .filter(col("rega") === col("regb"))
-          .select(col("a"), col("b")).iterCkpt(ser)))(
-          scala.concurrent.ExecutionContext.global)
-        val (n2, n2N) = traced("pivot subtract")(
-          nodes.join(assigned, Seq("id"), "left_anti")
-          .iterCkptCounted(ser))
-        val e2 = scala.concurrent.Await.result(e2F,
-          scala.concurrent.duration.Duration.Inf)
+        // also drops assigned endpoints — no separate anti join).
+        // Checkpoint + count fold: one job each (Ckpt.counted, r19);
+        // node subtract and edge rebuild are independent — overlapped,
+        // parents released only after both materialize
+        val ((e2, e2N), (n2, n2N)) = overlap(
+          h.counted(traced("pivot edge rebuild")(e
+            .join(regNext.select(col("id").as("a"), col("reg").as("rega")),
+              Seq("a"))
+            .join(regNext.select(col("id").as("b"), col("reg").as("regb")),
+              Seq("b"))
+            .filter(col("rega") === col("regb"))
+            .select(col("a"), col("b")).iterCkptCounted(ser))),
+          h.counted(traced("pivot subtract")(
+            nodes.join(assigned, Seq("id"), "left_anti")
+              .iterCkptCounted(ser))))
         graft.Release(nodes); graft.Release(e); graft.Release(regNodes)
-        nodes = n2; e = e2; regNodes = regNext
+        nodes = n2; e = e2; eN = e2N; regNodes = regNext
         remN = n2N
       }
     }
@@ -814,6 +897,92 @@ object GraphOps {
       val kept = parts.toSeq
       (kept.reduce(_ unionByName _), () => kept.foreach(graft.Release(_)))
     }
+  }
+
+  /** The serial finish as one more checkpointed part: collect the
+    * remaining edges and label their endpoints with [[sccMinLabels]].
+    * The labels are checkpointed, not left a local relation, so the
+    * final union reads blocks instead of shipping the rows inside
+    * every task. */
+  private def sccLocalPart(e: DataFrame,
+                           level: org.apache.spark.storage.StorageLevel)
+      : DataFrame = {
+    val rows = e.select("a", "b").collect()
+    val (ids, scc) =
+      sccMinLabels(rows.map(_.getLong(0)), rows.map(_.getLong(1)))
+    val out = new java.util.ArrayList[Row](ids.length)
+    for (i <- ids.indices) out.add(Row(ids(i), scc(i)))
+    e.sparkSession.createDataFrame(out, StructType(Seq(
+        StructField("id", LongType, nullable = false),
+        StructField("scc", LongType, nullable = false))))
+      .iterCkpt(level)
+  }
+
+  /** Strongly connected components of an edge list on the driver: an
+    * iterative Tarjan (explicit call stack, so no recursion limit) over
+    * a CSR adjacency. Returns every endpoint, ascending, with its
+    * component's min id. Ids are densified by sort + binary search, so
+    * a dense index orders like its id and a component's min index
+    * names its min id. */
+  private def sccMinLabels(src: Array[Long], dst: Array[Long])
+      : (Array[Long], Array[Long]) = {
+    val m = src.length
+    val ids = {
+      val all = new Array[Long](2 * m)
+      System.arraycopy(src, 0, all, 0, m)
+      System.arraycopy(dst, 0, all, m, m)
+      java.util.Arrays.sort(all)
+      var k = 0
+      for (i <- all.indices)
+        if (i == 0 || all(i) != all(i - 1)) { all(k) = all(i); k += 1 }
+      java.util.Arrays.copyOf(all, k)
+    }
+    val n = ids.length
+    val s = src.map(java.util.Arrays.binarySearch(ids, _))
+    val d = dst.map(java.util.Arrays.binarySearch(ids, _))
+    val off = new Array[Int](n + 1)
+    s.foreach(v => off(v + 1) += 1)
+    for (v <- 0 until n) off(v + 1) += off(v)
+    val adj = new Array[Int](m)
+    val fill = java.util.Arrays.copyOf(off, n)
+    for (k <- 0 until m) { adj(fill(s(k))) = d(k); fill(s(k)) += 1 }
+    val index = Array.fill(n)(-1)
+    val low = new Array[Int](n)
+    val next = new Array[Int](n) // each node's cursor into adj
+    val onStack = new Array[Boolean](n)
+    val stack = new Array[Int](n)
+    val call = new Array[Int](n)
+    val label = new Array[Long](n)
+    var sp = 0; var cp = 0; var counter = 0
+    def visit(v: Int): Unit = {
+      index(v) = counter; low(v) = counter; counter += 1
+      next(v) = off(v); onStack(v) = true
+      stack(sp) = v; sp += 1; call(cp) = v; cp += 1
+    }
+    for (root <- 0 until n if index(root) < 0) {
+      visit(root)
+      while (cp > 0) {
+        val v = call(cp - 1)
+        if (next(v) < off(v + 1)) {
+          val w = adj(next(v)); next(v) += 1
+          if (index(w) < 0) visit(w)
+          else if (onStack(w)) low(v) = math.min(low(v), index(w))
+        } else {
+          cp -= 1
+          if (cp > 0) low(call(cp - 1)) = math.min(low(call(cp - 1)), low(v))
+          if (low(v) == index(v)) {
+            // v roots a component: its members sit on the stack above it
+            var k = sp; var mn = Int.MaxValue
+            while ({ k -= 1; mn = math.min(mn, stack(k)); stack(k) != v }) ()
+            for (j <- k until sp) {
+              onStack(stack(j)) = false; label(stack(j)) = ids(mn)
+            }
+            sp = k
+          }
+        }
+      }
+    }
+    (ids, label)
   }
 
   /** Condensation (SCC quotient) edges: the distinct component-level
@@ -866,28 +1035,26 @@ object GraphOps {
   /** [[bowtieClassify]] plus the release handle for the result
     * checkpoint. */
   def bowtieClassifyReleasable(edges: DataFrame, scc: DataFrame,
-      maxHops: Int): (DataFrame, () => Unit) = {
+      maxHops: Int): (DataFrame, () => Unit) = held { h =>
     val ser = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-    val e = edges.select(col("a").cast("long").as("a"),
+    val e = h(edges.select(col("a").cast("long").as("a"),
         col("b").cast("long").as("b"))
       .filter(col("a") =!= col("b")).distinct()
-      .iterCkpt(ser)
+      .iterCkpt(ser))
     val top = scc.groupBy(col("scc")).agg(count(lit(1)).as("_n"))
       .orderBy(col("_n").desc, col("scc").asc).limit(1).collect()
     require(top.nonEmpty, "bowtieClassify: empty SCC assignment")
     val coreId = top(0).getLong(0)
-    val coreNodes = scc.filter(col("scc") === coreId)
-      .select(col("id")).iterCkpt(ser)
+    val coreNodes = h(scc.filter(col("scc") === coreId)
+      .select(col("id")).iterCkpt(ser))
     // independent BFS loops over the same materialized edge checkpoint
-    // — overlap on two driver threads (guide §2.6, the SCC pivot
-    // discipline): wall cost max(fwd, bwd), deterministic results
-    val bwdF = scala.concurrent.Future(reachFromSeeds(
-      e.select(col("b").as("a"), col("a").as("b")), coreNodes, maxHops))(
-      scala.concurrent.ExecutionContext.global)
-    val (fwd, relF) = reachFromSeeds(e, coreNodes, maxHops)
-    val (bwd, relB) = scala.concurrent.Await.result(bwdF,
-      scala.concurrent.duration.Duration.Inf)
-    val cls = scc.select(col("id"), (col("scc") === coreId).as("_c"))
+    // — overlapped (the SCC pivot discipline): wall cost max(fwd, bwd),
+    // deterministic results
+    val ((bwd, relB), (fwd, relF)) = overlap(
+      h.handle(reachFromSeeds(
+        e.select(col("b").as("a"), col("a").as("b")), coreNodes, maxHops)),
+      h.handle(reachFromSeeds(e, coreNodes, maxHops)))
+    val cls = h(scc.select(col("id"), (col("scc") === coreId).as("_c"))
       .join(fwd.select(col("id"), lit(true).as("_f")), Seq("id"), "left")
       .join(bwd.select(col("id"), lit(true).as("_b")), Seq("id"), "left")
       .select(col("id"),
@@ -895,7 +1062,7 @@ object GraphOps {
           .when(col("_b").isNotNull, "in")
           .when(col("_f").isNotNull, "out")
           .otherwise("other").as("cls"))
-      .iterCkpt(ser)
+      .iterCkpt(ser))
     relF(); relB()
     graft.Release(e); graft.Release(coreNodes)
     (cls, () => graft.Release(cls))

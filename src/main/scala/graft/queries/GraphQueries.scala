@@ -140,14 +140,17 @@ object GraphQueries {
     "gr9_link_pred" -> ((s, d) =>
       GraphOps.linkPrediction(knnEdges(s, d, 5), minCommon = 2L)),
 
-    // Strongly connected components (FB-Trim) over a DIRECTED graph
-    // with planted bow-tie structure derived arithmetically from
-    // doc_id (so the oracle is closed-form and sf-stable): two 5-rings
-    // (doc_id < 10 — SCCs of 5, one pivot round each) and a
+    // Strongly connected components (FB-Trim with the serial finish)
+    // over a DIRECTED graph with planted bow-tie structure derived
+    // arithmetically from doc_id (so the oracle is closed-form and
+    // sf-stable): two 5-rings (doc_id < 10 — SCCs of 5) and a
     // scale-growing tendril mass (every doc_id ≥ 10 hangs off ring
     // node id%10, alternating direction by id%3 so BOTH trim classes
-    // — no-in and no-out — fire). The algorithmic (non-planted) gate
-    // is GraphSpec's random-digraph property test vs a driver Tarjan.
+    // — no-in and no-out — fire). One trim round drains the tendrils;
+    // the 10-edge core left is far under the finish bound, so the
+    // rings are labelled on the driver, not by pivot rounds. The
+    // algorithmic (non-planted) gate is GraphSpec's random-digraph
+    // property tests vs a driver Tarjan, on both paths.
     "gr12_scc" -> ((s, d) =>
       leased("gr12_scc")(GraphOps.stronglyConnectedComponentsReleasable(
         sccBowtieEdges(s, d), maxPivotRounds = 16, maxHops = 8))),
@@ -202,12 +205,11 @@ object GraphQueries {
   )
 
   /** gr12/gr13's planted bow-tie: two 5-rings (doc_id < 10 — SCCs of
-    * 5; each costs a pivot round of driver-side BFS jobs, so the
-    * CONSTANT count is deliberately small — the trim path, which is
-    * where web-graph mass actually drains, gets the scale-growing
-    * side) plus the tendril mass (every doc_id ≥ 10 hangs off ring
-    * node id % 10, alternating direction by id % 3 so BOTH trim
-    * classes fire). */
+    * 5; a constant-size core, finished on the driver once the trim has
+    * drained — the trim path, which is where web-graph mass actually
+    * drains, gets the scale-growing side) plus the tendril mass (every
+    * doc_id ≥ 10 hangs off ring node id % 10, alternating direction by
+    * id % 3 so BOTH trim classes fire). */
   private[graft] def sccBowtieEdges(s: SparkSession, d: String): DataFrame = {
     val ids = documents(s, d).select(col("doc_id").cast("long").as("id"))
     val ring = ids.filter(col("id") < 10).select(col("id").as("a"),

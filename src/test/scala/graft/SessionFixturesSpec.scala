@@ -51,14 +51,56 @@ class SessionFixturesSpec extends SparkSpec {
           "and is not a legitimate prelude entry")
     }
 
-    // memoized: a second full build forces nothing (sub-second, vs
-    // multi-second first build at any sf)
-    val t0 = System.nanoTime()
-    val again = SessionFixtures.buildAllDetail(spark, sfDir)
-    val sec = (System.nanoTime() - t0) / 1e9
+    // memoized: a second full build rebuilds nothing. A rebuild
+    // deletes and rewrites its fixture's marker and runs batch jobs, so
+    // every marker must keep its mtime and no batch job may start; the
+    // stream warm-up drains run by design on every call, as streaming
+    // jobs (they carry a query id), and are the only jobs allowed.
+    // Both checks catch a rebuild of any size, where a wall-clock bound
+    // caught only a slow one and tripped on host load.
+    def mtimes = artifactDirs.map(d =>
+      Files.getLastModifiedTime(Paths.get(d, IvfFixture.MarkerName)))
+    val marked = mtimes
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.scheduler.SparkListenerJobStart]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(e)
+    }
+    // job ids are handed out in submission order, and the bus delivers
+    // in that order: the jobs between two marker jobs are exactly the
+    // ones the call submitted, from whatever thread
+    def markerJob(group: String): Int = {
+      sc.setJobGroup(group, group)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 60e9.toLong
+      var id = -1
+      while (id < 0) {
+        jobs.forEach(e => if (Option(e.properties).exists(p =>
+          p.getProperty("spark.jobGroup.id") == group)) id = e.jobId)
+        assert(System.nanoTime() < deadline, s"no start event for $group")
+        if (id < 0) Thread.sleep(20)
+      }
+      id
+    }
+    sc.addSparkListener(listener)
+    val again = try {
+      val from = markerJob("fixtures-memo-from")
+      val a = SessionFixtures.buildAllDetail(spark, sfDir)
+      val to = markerJob("fixtures-memo-to")
+      val batchJobs = jobs.toArray(Array.empty[
+        org.apache.spark.scheduler.SparkListenerJobStart]).count(e =>
+        e.jobId > from && e.jobId < to && Option(e.properties)
+          .forall(_.getProperty("sql.streaming.queryId") == null))
+      assert(batchJobs == 0,
+        s"second buildAll ran $batchJobs batch job(s) — a fixture " +
+          "is rebuilding per call instead of memoizing per process")
+      a
+    } finally sc.removeSparkListener(listener)
     assert(again.size == detail.size)
-    assert(sec < 5.0,
-      f"second buildAll took $sec%.1f s — a fixture is rebuilding " +
-        "per call instead of memoizing per process")
+    assert(mtimes == marked,
+      "a fixture marker was rewritten by the second buildAll")
   }
 }

@@ -15,7 +15,10 @@ class GeocoderSpec extends SparkSpec {
       // regex word boundaries: Unicode letters and digits, `_` and
       // combining marks next to an abbreviation
       "\u00e9 st", "st_", "9st", "s\u0301t", "st\u0301", "\u0663 st",
-      "_st w", "x\u0301 n", "\u00e9 \u0301st", "12 \u00e9st e")
+      "_st w", "x\u0301 n", "\u00e9 \u0301st", "12 \u00e9st e",
+      // String.trim drops every char up to U+0020 at either end, not
+      // only the space
+      "\tst", "12 broadway\n", "\u0001w")
     val viaCol = samples.toDF("a")
       .select(Geocoder.normalizeAddress(col("a"))).as[String].collect().toSeq
     assert(viaCol == samples.map(Geocoder.normalizeAddress))

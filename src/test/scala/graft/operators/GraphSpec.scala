@@ -264,6 +264,13 @@ class GraphSpec extends SparkSpec {
       val sccRel = sccDf.as[(Long, Long)].collect().sorted.toSeq
       assert(sccRel == sccLocal, "scc differs under reliable ckpt")
       rel()
+      // the pivot rounds too, not only the serial finish
+      val (sccDistDf, relD) = GraphOps.sccReleasable(
+        handEdges.unionByName(Seq((9L, 1L)).toDF("a", "b")),
+        maxPivotRounds = 16, maxHops = 32, localFinishMaxEdges = -1)
+      assert(sccDistDf.as[(Long, Long)].collect().sorted.toSeq == sccLocal,
+        "distributed scc differs under reliable ckpt")
+      relD()
       assert(rddDirs().isEmpty,
         s"iterative ops left reliable checkpoint files: ${rddDirs()}")
     } finally {
@@ -445,56 +452,57 @@ class GraphSpec extends SparkSpec {
     }
   }
 
-  test("scc matches a driver Tarjan on random digraphs; trim classes and guards behave") {
-    import spark.implicits._
-    // iterative Tarjan (explicit stack — no JVM recursion limits)
-    def tarjan(n: Int, adj: Map[Int, Seq[Int]]): Map[Long, Long] = {
-      val index = Array.fill(n)(-1); val low = Array.fill(n)(0)
-      val onStack = Array.fill(n)(false)
-      val stack = scala.collection.mutable.Stack[Int]()
-      var counter = 0
-      val comp = Array.fill(n)(-1)
-      for (root <- 0 until n if index(root) < 0) {
-        // work stack of (node, child-iterator position)
-        val work = scala.collection.mutable.Stack[(Int, Int)]((root, 0))
-        while (work.nonEmpty) {
-          val (v, ci) = work.pop()
-          if (ci == 0) {
-            index(v) = counter; low(v) = counter; counter += 1
-            stack.push(v); onStack(v) = true
+  // iterative Tarjan (explicit stack — no JVM recursion limits)
+  private def tarjan(n: Int, adj: Map[Int, Seq[Int]]): Map[Long, Long] = {
+    val index = Array.fill(n)(-1); val low = Array.fill(n)(0)
+    val onStack = Array.fill(n)(false)
+    val stack = scala.collection.mutable.Stack[Int]()
+    var counter = 0
+    val comp = Array.fill(n)(-1)
+    for (root <- 0 until n if index(root) < 0) {
+      // work stack of (node, child-iterator position)
+      val work = scala.collection.mutable.Stack[(Int, Int)]((root, 0))
+      while (work.nonEmpty) {
+        val (v, ci) = work.pop()
+        if (ci == 0) {
+          index(v) = counter; low(v) = counter; counter += 1
+          stack.push(v); onStack(v) = true
+        }
+        val kids = adj.getOrElse(v, Seq.empty)
+        var advanced = false
+        var i = ci
+        while (i < kids.length && !advanced) {
+          val w = kids(i)
+          if (index(w) < 0) {
+            work.push((v, i + 1)); work.push((w, 0)); advanced = true
+          } else {
+            if (onStack(w)) low(v) = math.min(low(v), index(w))
+            i += 1
           }
-          val kids = adj.getOrElse(v, Seq.empty)
-          var advanced = false
-          var i = ci
-          while (i < kids.length && !advanced) {
-            val w = kids(i)
-            if (index(w) < 0) {
-              work.push((v, i + 1)); work.push((w, 0)); advanced = true
-            } else {
-              if (onStack(w)) low(v) = math.min(low(v), index(w))
-              i += 1
+        }
+        if (!advanced && i >= kids.length) {
+          if (low(v) == index(v)) {
+            var done = false
+            val members = scala.collection.mutable.Buffer[Int]()
+            while (!done) {
+              val w = stack.pop(); onStack(w) = false
+              members += w; done = w == v
             }
+            val m = members.min
+            members.foreach(comp(_) = m)
           }
-          if (!advanced && i >= kids.length) {
-            if (low(v) == index(v)) {
-              var done = false
-              val members = scala.collection.mutable.Buffer[Int]()
-              while (!done) {
-                val w = stack.pop(); onStack(w) = false
-                members += w; done = w == v
-              }
-              val m = members.min
-              members.foreach(comp(_) = m)
-            }
-            if (work.nonEmpty) {
-              val (p, _) = work.top
-              low(p) = math.min(low(p), low(v))
-            }
+          if (work.nonEmpty) {
+            val (p, _) = work.top
+            low(p) = math.min(low(p), low(v))
           }
         }
       }
-      (0 until n).map(v => v.toLong -> comp(v).toLong).toMap
     }
+    (0 until n).map(v => v.toLong -> comp(v).toLong).toMap
+  }
+
+  test("scc matches a driver Tarjan on random digraphs; trim classes and guards behave") {
+    import spark.implicits._
     for (seed <- Seq(1, 2, 3)) {
       val n = 30
       val rnd = new scala.util.Random(seed)
@@ -526,11 +534,122 @@ class GraphSpec extends SparkSpec {
     // truncated reach must FAIL LOUDLY, never split an SCC silently:
     // a 5-ring with maxHops 2
     val ringE = (0L until 5L).map(i => (i, (i + 1) % 5)).toDF("a", "b")
+    // (on the forced-distributed path: the serial finish runs no reach)
     val err = intercept[Exception] {
-      GraphOps.stronglyConnectedComponents(ringE,
-        maxPivotRounds = 4, maxHops = 2).collect()
+      GraphOps.sccReleasable(ringE, maxPivotRounds = 4, maxHops = 2,
+        localFinishMaxEdges = -1)._1.collect()
     }
     assert(err.getMessage.contains("maxHops"), err.getMessage)
+  }
+
+  /** The SCC model: (id -> min id of its component) over every edge
+    * endpoint, from [[tarjan]] on the edge list. */
+  private def sccModel(es: Seq[(Long, Long)]): Map[Long, Long] = {
+    val n = (es.flatMap(e => Seq(e._1, e._2)).max + 1).toInt
+    val adj = es.groupBy(_._1.toInt)
+      .map { case (k, v) => k -> v.map(_._2.toInt).sorted }
+    val touched = es.flatMap(e => Seq(e._1, e._2)).toSet
+    tarjan(n, adj).filter { case (v, _) => touched(v) }
+  }
+
+  private def sccOf(es: Seq[(Long, Long)], localFinishMaxEdges: Long)
+      : (Map[Long, Long], Int) = {
+    val (df, rel) = GraphOps.sccReleasable(es.toDF("a", "b"),
+      maxPivotRounds = 64, maxHops = 64,
+      localFinishMaxEdges = localFinishMaxEdges)
+    val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    rel()
+    (got, GraphOps.lastSccPivotRounds)
+  }
+
+  test("scc serial finish, forced-distributed path and Tarjan agree on random digraphs") {
+    val rnd = new scala.util.Random(7)
+    // planted bow-ties: rings of 2..6 nodes, each with in- and out-
+    // tendrils, joined into a DAG of rings by one-way bridges, plus
+    // self-loops sprinkled over ring and tendril nodes
+    def bowties(rings: Int): Seq[(Long, Long)] = {
+      var next = 0L
+      val ringNodes = (0 until rings).map { _ =>
+        val k = 2 + rnd.nextInt(5)
+        val ns = (next until next + k).toSeq; next += k; ns
+      }
+      val ringE = ringNodes.flatMap(ns =>
+        ns.indices.map(i => (ns(i), ns((i + 1) % ns.size))))
+      val bridges = for (i <- ringNodes.indices; j <- ringNodes.indices
+        if i < j && rnd.nextInt(3) == 0)
+        yield (ringNodes(i).head, ringNodes(j).last)
+      val tendrils = ringNodes.flatMap { ns =>
+        val in = next; val out = next + 1; next += 2
+        Seq((in, ns(rnd.nextInt(ns.size))), (ns(rnd.nextInt(ns.size)), out))
+      }
+      val loops = (0L until next).filter(_ => rnd.nextInt(5) == 0)
+        .map(v => (v, v))
+      ringE ++ bridges ++ tendrils ++ loops
+    }
+    def random(n: Int, pct: Int): Seq[(Long, Long)] =
+      for (a <- 0 until n; b <- 0 until n if rnd.nextInt(100) < pct)
+        yield (a.toLong, b.toLong)
+    val graphs = Seq(bowties(4), bowties(7), random(30, 8), random(60, 3))
+    graphs.zipWithIndex.foreach { case (es, i) =>
+      val want = sccModel(es)
+      val (local, localPivots) = sccOf(es, GraphOps.SccLocalFinishMaxEdges)
+      val (dist, distPivots) = sccOf(es, -1)
+      assert(local == want, s"graph $i: serial finish differs from Tarjan")
+      assert(dist == want, s"graph $i: distributed path differs from Tarjan")
+      assert(localPivots == 0, s"graph $i: the finish ran $localPivots pivots")
+      // several components survive the trim in every graph here
+      assert(distPivots > 0, s"graph $i: the distributed path never pivoted")
+    }
+  }
+
+  test("scc mixed path: pivot rounds shrink the core, the serial finish ends the loop") {
+    // three 5-rings chained 0-ring -> 5-ring -> 10-ring, plus a tendril
+    // into each: 17 edges survive the trim. Round 1 pivots at 0 and
+    // assigns the first ring; the 11 edges left fit a bound of 12, so
+    // the finish labels the other two rings. The distributed path
+    // needs a round per ring.
+    val rings = (0L until 15L).map(i => (i, i - i % 5 + (i + 1) % 5))
+    val es = rings ++ Seq((4L, 5L), (9L, 10L), (20L, 0L), (21L, 5L),
+      (22L, 10L))
+    val want = sccModel(es)
+    val (mixed, mixedPivots) = sccOf(es, 12)
+    val (dist, distPivots) = sccOf(es, -1)
+    assert(mixed == want && dist == want)
+    assert(mixedPivots == 1, s"mixed path ran $mixedPivots pivot rounds")
+    assert(distPivots == 3, s"distributed path ran $distPivots pivot rounds")
+  }
+
+  test("a failing SCC or bow-tie call releases every checkpoint it made") {
+    // both overlapped reaches of a 5-ring outrun maxHops = 2: the call
+    // must throw with the other side's error suppressed, and leave no
+    // block behind (diffed against a baseline: the ContextCleaner may
+    // drop other tests' dead checkpoints meanwhile, never add)
+    val sc = spark.sparkContext
+    def ids: Set[Int] = sc.getPersistentRDDs.keySet.toSet
+    val ringE = (0L until 5L).map(i => (i, (i + 1) % 5)).toDF("a", "b")
+    val base = ids
+    val err = intercept[IllegalArgumentException] {
+      GraphOps.sccReleasable(ringE, maxPivotRounds = 4, maxHops = 2,
+        localFinishMaxEdges = -1)
+    }
+    assert(err.getMessage.contains("maxHops"), err.getMessage)
+    assert(err.getSuppressed.exists(_.getMessage.contains("maxHops")),
+      "the second reach's error was dropped")
+    assert((ids -- base).isEmpty,
+      s"failed SCC left checkpoints behind: ${ids -- base}")
+    // bow-tie: core ring 0-1-2, out-chain 2 -> 3 -> 4 -> 5 outruns
+    // maxHops = 1 on the forward side only
+    val edges = Seq((0L, 1L), (1L, 2L), (2L, 0L), (2L, 3L), (3L, 4L),
+      (4L, 5L)).toDF("a", "b")
+    val scc = Seq((0L, 0L), (1L, 0L), (2L, 0L), (3L, 3L), (4L, 4L),
+      (5L, 5L)).toDF("id", "scc")
+    val base2 = ids
+    val err2 = intercept[IllegalArgumentException] {
+      GraphOps.bowtieClassifyReleasable(edges, scc, maxHops = 1)
+    }
+    assert(err2.getMessage.contains("maxHops"), err2.getMessage)
+    assert((ids -- base2).isEmpty,
+      s"failed bow-tie left checkpoints behind: ${ids -- base2}")
   }
 
   test("bowtieClassify: core pick, in/out/other regions, tie-break, disjointness") {
