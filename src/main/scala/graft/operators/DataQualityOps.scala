@@ -402,42 +402,59 @@ object DataQualityOps {
     *  - `manifest_drift_shards`: shards whose claimed n_docs ≠ the
     *    actual placement count (either side missing counts)
     *
-    * Scale shape: every check is an id-keyed anti/semi equi join or a
-    * map-side-combined aggregate — no windows, no collects; the six
-    * single-row counts union at the end. At 100 TB the placements and
-    * source scans dominate and shuffle once each on the id.
+    * Scale shape: ONE grouped pass answers the five id checks. The four
+    * id inputs are tagged and unioned, grouped once by id into
+    * membership flags (`s` source, `k` kept, `t` tombstoned) and a
+    * placement count `p`, and one global aggregate sums them:
+    * ghost = Σp where ¬s, leak = Σp where t, unplanned = Σp where
+    * s ∧ ¬k, lost = #ids where k ∧ ¬t ∧ p = 0, dup = #ids where p > 1.
+    * So the id inputs share one id-keyed exchange, however many checks
+    * read them. A null id matches
+    * nothing across inputs, as in a join: it groups per input (the
+    * input tag joins the key only when the id is null), so a null-id
+    * placement is a ghost, a null kept id is lost, and a null-id
+    * placement group of two or more rows is a dup. Drift is the one
+    * join: the manifest full-outer-joined with per-shard placement
+    * counts on the shard (a duplicated manifest shard counts once per
+    * row). At 100 TB the placements and source scans dominate: the
+    * source shuffles once, the placements twice (on the id, and on the
+    * shard for drift), each map-side combined.
     */
   def provenanceAudit(source: DataFrame, kept: DataFrame,
                       tombstones: DataFrame, placements: DataFrame,
                       manifest: DataFrame, idCol: String): DataFrame = {
-    val s = source.select(col(idCol)).distinct()
-    val k = kept.select(col(idCol)).distinct()
-    val ts = tombstones.select(col(idCol)).distinct()
-    val p = placements.select(col(idCol), col("shard"))
-    def cnt(df: DataFrame, name: String): DataFrame =
-      df.agg(count(lit(1)).cast("long").as("n_bad"))
-        .select(lit(name).as("check_name"), col("n_bad"))
-    val ghost = cnt(p.join(s, Seq(idCol), "left_anti"),
-      "ghost_placements")
-    val leak = cnt(p.join(ts, Seq(idCol), "left_semi"),
-      "tombstone_leaks")
-    val unplanned = cnt(p.join(s, Seq(idCol), "left_semi")
-      .join(k, Seq(idCol), "left_anti"), "unplanned_placements")
-    val lost = cnt(k.join(ts, Seq(idCol), "left_anti")
-      .join(p.select(col(idCol)).distinct(), Seq(idCol), "left_anti"),
-      "lost_records")
-    val dup = cnt(p.groupBy(col(idCol))
-      .agg(count(lit(1)).as("_c")).filter(col("_c") > 1),
-      "duplicate_placement_ids")
-    val actual = p.groupBy(col("shard"))
+    val tag = col("_tag")
+    def tagged(df: DataFrame, t: Int): DataFrame =
+      df.select(col(idCol), lit(t).as("_tag"))
+    val perId = tagged(source, 0).unionByName(tagged(kept, 1))
+      .unionByName(tagged(tombstones, 2)).unionByName(tagged(placements, 3))
+      .groupBy(col(idCol), when(col(idCol).isNull, tag).as("_null_tag"))
+      .agg(max(tag === 0).as("s"), max(tag === 1).as("k"),
+        max(tag === 2).as("t"), count(when(tag === 3, lit(1))).as("p"))
+    val (s, k, t, p) = (col("s"), col("k"), col("t"), col("p"))
+    val idChecks = Seq(
+      "ghost_placements" -> sum(when(!s, p)),
+      "tombstone_leaks" -> sum(when(t, p)),
+      "unplanned_placements" -> sum(when(s && !k, p)),
+      "lost_records" -> count(when(k && !t && p === 0, lit(1))),
+      "duplicate_placement_ids" -> count(when(p > 1, lit(1))))
+    val sums = idChecks.map { case (n, c) => c.as(n) }
+    val fold = perId.agg(sums.head, sums.tail: _*)
+      .select(explode(array(idChecks.map { case (n, _) =>
+        struct(lit(n).as("check_name"),
+          coalesce(col(n), lit(0L)).cast("long").as("n_bad"))
+      }: _*)).as("_c"))
+      .select("_c.*")
+    val actual = placements.groupBy(col("shard"))
       .agg(count(lit(1)).cast("long").as("_actual"))
-    val drift = cnt(manifest
+    val drift = manifest
       .select(col("shard"), col("n_docs").cast("long").as("_claimed"))
       .join(actual, Seq("shard"), "full_outer")
       .filter(coalesce(col("_claimed"), lit(0L)) =!=
-        coalesce(col("_actual"), lit(0L))), "manifest_drift_shards")
-    ghost.unionByName(leak).unionByName(unplanned).unionByName(lost)
-      .unionByName(dup).unionByName(drift)
+        coalesce(col("_actual"), lit(0L)))
+      .agg(count(lit(1)).cast("long").as("n_bad"))
+      .select(lit("manifest_drift_shards").as("check_name"), col("n_bad"))
+    fold.unionByName(drift)
   }
 
   /** Per-slice quality report: the same exact-integer metrics grouped

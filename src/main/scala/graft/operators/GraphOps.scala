@@ -383,6 +383,18 @@ object GraphOps {
     (last, () => graft.Release(last))
   }
 
+  /** The most edges an iterative operator (the SCC loop, the k-core
+    * peel) collects and finishes on the driver instead of running
+    * another distributed round. Why 100,000: a distributed round is
+    * dozens of small driver-synchronous jobs and costs seconds
+    * whatever the graph's size, while at 100,000 edges the collect and
+    * the serial pass cost a fraction of that (0.33 s against 4.0 s for
+    * the cheapest SCC pivot round measured; PERF.md "SCC serial
+    * finish", "k-core driver finish"). Above it the serial pass grows
+    * linearly on one driver thread and the collect holds every edge in
+    * driver memory, while a round's jobs spread over the executors. */
+  private[graft] val LocalFinishMaxEdges = 100000L
+
   /** k-core: peel nodes of degree < k from the UNDIRECTED graph for up
     * to `maxRounds` rounds (early-stop when a round removes nothing —
     * output-invariant, since further peels would also be no-ops).
@@ -390,11 +402,20 @@ object GraphOps {
     * `maxRounds` peels, which equals this whenever the peel converges
     * within the bound AND when it doesn't (both sides have then done
     * exactly `maxRounds` rounds) — GraphSpec asserts convergence at
-    * test scale so the cap isn't silently load-bearing.
+    * test scale so the cap isn't silently load-bearing. The peel is
+    * therefore round-synchronous and capped — a round keeps the nodes
+    * with ≥ k neighbours alive at its start — not a full core
+    * decomposition.
     *
-    * Each round is one aggregate + one semi-join per side over (a, b)
-    * longs; survivors are checkpointed and the superseded frame
-    * released.
+    * Each distributed round is one aggregate + one semi-join per side
+    * over (a, b) longs; survivors are checkpointed and the superseded
+    * frame released. A graph of at most [[LocalFinishMaxEdges]]
+    * undirected edges (both directions counted) skips those rounds:
+    * it is collected and peeled on the driver by the same rule and
+    * the same `maxRounds` cap, and the survivors come back as one
+    * checkpointed frame — each distributed round is several tiny
+    * driver-synchronous jobs, which on a small graph cost more than
+    * the whole serial peel (PERF.md "k-core driver finish").
     */
   def kcore(edges: DataFrame, k: Int, maxRounds: Int = 8): DataFrame =
     kcoreReleasable(edges, k, maxRounds)._1
@@ -402,10 +423,29 @@ object GraphOps {
   /** [[kcore]] plus a release handle for the final survivor
     * checkpoint; internal checkpoints are released before return. */
   def kcoreReleasable(edges: DataFrame, k: Int, maxRounds: Int = 8)
+      : (DataFrame, () => Unit) =
+    kcorePeelReleasable(edges, k, maxRounds)
+
+  /** [[kcoreReleasable]] with the driver-finish bound open: a negative
+    * `localFinishMaxEdges` forces the distributed peel. */
+  private[graft] def kcorePeelReleasable(edges: DataFrame, k: Int,
+      maxRounds: Int, localFinishMaxEdges: Long = LocalFinishMaxEdges)
       : (DataFrame, () => Unit) = {
     require(k >= 1, s"k must be >= 1: $k")
     val ser = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-    val e = undirected(edges).iterCkpt(ser)
+    // counted, so the finish dispatch costs no job of its own
+    val (e, eN) = undirected(edges).iterCkptCounted(ser)
+    val last =
+      if (eN <= localFinishMaxEdges) kcoreLocal(e, k, maxRounds, ser)
+      else kcoreRounds(e, k, maxRounds, ser)
+    graft.Release(e)
+    (last, () => graft.Release(last))
+  }
+
+  /** The distributed peel over the checkpointed symmetric edges `e`. */
+  private def kcoreRounds(e: DataFrame, k: Int, maxRounds: Int,
+                          ser: org.apache.spark.storage.StorageLevel)
+      : DataFrame = {
     // checkpoint + early-stop count fold to ONE job per round
     // (Ckpt.counted — r19, guide §2 driver-round latency)
     var (alive, aliveN) = e.select(col("a").as("id")).distinct()
@@ -427,9 +467,46 @@ object GraphOps {
       aliveN = nextN
       round += 1
     }
-    graft.Release(e)
-    val last = alive
-    (last, () => graft.Release(last))
+    alive
+  }
+
+  /** The k-core peel of a collected symmetric edge frame `e` (a, b), on
+    * the driver: round-synchronous like the distributed loop, at most
+    * `maxRounds` rounds, stopping early once a round removes nothing.
+    * Returns the survivors as a checkpointed `id` frame of the edge
+    * frame's id type. */
+  private def kcoreLocal(e: DataFrame, k: Int, maxRounds: Int,
+                         level: org.apache.spark.storage.StorageLevel)
+      : DataFrame = {
+    val rows = e.select("a", "b").collect()
+    val index = new java.util.HashMap[Any, Integer]()
+    val ids = scala.collection.mutable.ArrayBuffer[Any]()
+    def dense(v: Any): Int = {
+      val i = index.get(v)
+      if (i != null) i
+      else { index.put(v, ids.length); ids += v; ids.length - 1 }
+    }
+    val src = rows.map(r => dense(r.get(0)))
+    val dst = rows.map(r => dense(r.get(1)))
+    val n = ids.length
+    val alive = Array.fill(n)(true)
+    val deg = new Array[Int](n)
+    var round = 0
+    var removed = 1
+    while (round < maxRounds && removed > 0) {
+      java.util.Arrays.fill(deg, 0)
+      for (i <- src.indices)
+        if (alive(src(i)) && alive(dst(i))) deg(src(i)) += 1
+      removed = 0
+      for (v <- 0 until n)
+        if (alive(v) && deg(v) < k) { alive(v) = false; removed += 1 }
+      round += 1
+    }
+    val out = new java.util.ArrayList[Row](n)
+    for (v <- 0 until n if alive(v)) out.add(Row(ids(v)))
+    e.sparkSession.createDataFrame(out,
+        StructType(Seq(e.schema("a").copy(name = "id"))))
+      .iterCkpt(level)
   }
 
   /** Multi-source BFS hop distances over the undirected graph —
@@ -665,7 +742,7 @@ object GraphOps {
     *     pages, dead ends) drain in a few rounds at any scale,
     *     without ever paying a reachability pass.
     *  2. FINISH, when the trimmed remainder holds at most
-    *     [[SccLocalFinishMaxEdges]] edges: collect them and label every
+    *     [[LocalFinishMaxEdges]] edges: collect them and label every
     *     remaining node with an iterative Tarjan on the driver. At the
     *     trim fixpoint every remaining node has an in- and an out-edge,
     *     and after a pivot round the edges are intra-region only (no
@@ -708,18 +785,12 @@ object GraphOps {
       : (DataFrame, () => Unit) =
     sccReleasable(edges, maxPivotRounds, maxHops, maxTrimRounds)
 
-  /** The most remaining edges the SCC loop finishes on the driver
-    * instead of running another pivot round. Sized from the measured
-    * collect + Tarjan cost against one pivot round's (PERF.md "SCC
-    * serial finish"). */
-  private[graft] val SccLocalFinishMaxEdges = 100000L
-
   /** [[stronglyConnectedComponentsReleasable]] with the finish bound
     * open: a negative `localFinishMaxEdges` forces the distributed
     * path, a small one runs pivot rounds before the finish. */
   private[graft] def sccReleasable(edges: DataFrame, maxPivotRounds: Int,
       maxHops: Int, maxTrimRounds: Int = 64,
-      localFinishMaxEdges: Long = SccLocalFinishMaxEdges)
+      localFinishMaxEdges: Long = LocalFinishMaxEdges)
       : (DataFrame, () => Unit) = held { h =>
     val ser = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
     val rawE = edges.select(col("a").cast("long").as("a"),

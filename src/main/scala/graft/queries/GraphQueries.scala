@@ -77,7 +77,10 @@ object GraphQueries {
     // any corpus size (a fixed similarity threshold densifies with
     // scale and degenerates the peel — probed), so the same (k, cap)
     // works at every sf. Peel converges well under the 8-round cap at
-    // both gated scales (GraphSpec asserts it).
+    // both gated scales (GraphSpec asserts it). The graph is far under
+    // GraphOps.LocalFinishMaxEdges, so the peel runs on the driver: the
+    // same round-synchronous rule and the same 8-round cap the oracle
+    // unrolls, one collect instead of a job chain per round.
     "gr3_kcore" -> ((s, d) => leased("gr3_kcore")(
       GraphOps.kcoreReleasable(GraphOps.mutualEdges(knnEdges(s, d, 8)),
         k = 4, maxRounds = 8))),

@@ -238,6 +238,82 @@ class DataQualitySpec extends SparkSpec {
     assert(audit(clean, m2)("manifest_drift_shards") == 1L)
   }
 
+  test("provenanceAudit: the grouped pass matches the join form on random inputs with nulls and duplicates") {
+    val rnd = new scala.util.Random(15)
+    // ids 0..24 with ~1 in 8 null; drawn with replacement, so every
+    // input repeats ids
+    def id(): Option[Long] =
+      if (rnd.nextInt(8) == 0) None else Some(rnd.nextInt(25).toLong)
+    def ids(n: Int) = Seq.fill(n)(id()).toDF("doc_id")
+    for (round <- 0 until 8) {
+      val source = ids(20 + rnd.nextInt(10)).withColumn("t", lit("x"))
+      val kept = ids(5 + rnd.nextInt(15))
+      val tombs = ids(rnd.nextInt(6))
+      // shards 0..5 in placements, 2..7 claimed: 6 and 7 appear only in
+      // the manifest, 0 and 1 only in the placements
+      val placements = Seq.fill(rnd.nextInt(30))(
+          (id(), Some(rnd.nextInt(6).toLong)))
+        .toDF("doc_id", "shard")
+      val manifest = (Seq.fill(3 + rnd.nextInt(5))(
+          (2L + rnd.nextInt(6),
+            if (rnd.nextInt(6) == 0) None else Some(rnd.nextInt(5).toLong)))
+        :+ ((2L, Option.empty[Long]))) // a duplicated shard, null n_docs
+        .toDF("shard", "n_docs")
+      type DF = org.apache.spark.sql.DataFrame
+      def run(f: (DF, DF, DF, DF, DF, String) => DF) =
+        f(source, kept, tombs, placements, manifest, "doc_id")
+          .as[(String, Long)].collect().toSeq.sorted
+      val fold = run(provenanceAudit)
+      val joins = run(ProvenanceJoinOracle.provenanceAudit)
+      assert(fold.size == 6, s"round $round: $fold")
+      assert(fold == joins, s"round $round")
+    }
+    // null ids keep join semantics: a null-id placement is a ghost and,
+    // two of them, a dup; a null kept id is lost
+    val nul = Seq(Option.empty[Long], None).toDF("doc_id")
+    val none = Seq.empty[Option[Long]].toDF("doc_id")
+    val got = provenanceAudit(Seq(Option(1L)).toDF("doc_id"),
+        nul, none, nul.withColumn("shard", lit(0L)),
+        Seq((0L, 2L)).toDF("shard", "n_docs"), "doc_id")
+      .as[(String, Long)].collect().toMap
+    assert(got == Map("ghost_placements" -> 2L, "tombstone_leaks" -> 0L,
+      "unplanned_placements" -> 0L, "lost_records" -> 1L,
+      "duplicate_placement_ids" -> 1L, "manifest_drift_shards" -> 0L),
+      got.toString)
+  }
+
+  test("provenanceAudit: the five id checks read placements through one id-keyed exchange") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val source = (1L to 40L).toDF("doc_id")
+    val kept = source.filter($"doc_id" % 4 =!= 0)
+    val tombs = Seq(3L, 6L).toDF("doc_id")
+    val placements = kept.select($"doc_id", ($"doc_id" % 5).as("shard"))
+    val manifest = placements.groupBy($"shard")
+      .agg(count(lit(1)).as("n_docs"))
+    val df = provenanceAudit(source, kept, tombs, placements, manifest,
+      "doc_id")
+    df.collect() // materialize so the adaptive plan is final
+    // walk AQE wrappers and materialized query stages (leaves to a
+    // plain collect); a reused exchange is a leaf, so it counts once
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other.children.flatMap(nodes)
+    })
+    val idKeyed = nodes(df.queryExecution.executedPlan).collect {
+      case x: ShuffleExchangeLike => x.outputPartitioning
+    }.collect {
+      case h: HashPartitioning
+          if h.expressions.exists(_.references.exists(_.name == "doc_id")) =>
+        h
+    }
+    assert(idKeyed.size == 1,
+      s"${idKeyed.size} id-keyed exchanges:\n${df.queryExecution.executedPlan}")
+  }
+
   test("referentialIntegrity: the dim marker side broadcasts") {
     val fact = Seq((1L, 10L)).toDF("id", "fk")
     val dim = Seq(10L).toDF("pk")

@@ -103,6 +103,65 @@ class GraphSpec extends SparkSpec {
     }
   }
 
+  test("kcore driver finish and forced-distributed peel agree on random graphs") {
+    val rnd = new scala.util.Random(3)
+    // the round-synchronous, capped peel the oracle unrolls
+    def model(es: Seq[(Long, Long)], k: Int, rounds: Int): Set[Long] = {
+      val und = es.filter(e => e._1 != e._2)
+        .flatMap(e => Seq(e, e.swap)).distinct
+      var alive = und.map(_._1).toSet
+      var r = 0
+      var changed = true
+      while (r < rounds && changed) {
+        val deg = und.filter(e => alive(e._1) && alive(e._2))
+          .groupBy(_._1).map { case (v, l) => v -> l.size }
+        val next = alive.filter(v => deg.getOrElse(v, 0) >= k)
+        changed = next != alive; alive = next; r += 1
+      }
+      alive
+    }
+    def kc(es: Seq[(Long, Long)], k: Int, rounds: Int, bound: Long)
+        : Set[Long] = {
+      val (df, rel) = GraphOps.kcorePeelReleasable(es.toDF("a", "b"), k,
+        rounds, bound)
+      val got = df.as[Long].collect().toSet
+      rel()
+      got
+    }
+    // random edges (self-loops included), then some repeated and some
+    // reversed: the undirected view must collapse them
+    def random(n: Int, m: Int): Seq[(Long, Long)] = {
+      val es = Seq.fill(m)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+      es ++ es.take(m / 5) ++ es.drop(m / 2).take(m / 5).map(_.swap) ++
+        Seq((0L, 0L), (1L, 1L))
+    }
+    // K5 with a 4-node tail hanging off node 0: the 2-core peels one
+    // tail node per round, so caps of 0, 1 and 2 cut it short
+    val tailed = (for (a <- 0L until 5L; b <- a + 1 until 5L) yield (a, b)) ++
+      Seq((0L, 10L), (10L, 11L), (11L, 12L), (12L, 13L))
+    val graphs = Seq(tailed, random(30, 50), random(40, 140))
+    graphs.zipWithIndex.foreach { case (es, i) =>
+      val maxDeg = es.filter(e => e._1 != e._2)
+        .flatMap(e => Seq(e, e.swap)).distinct.groupBy(_._1)
+        .values.map(_.size).max
+      for ((k, rounds) <- Seq((1, 8), (2, 0), (2, 1), (2, 2), (3, 8),
+          (maxDeg + 1, 8))) {
+        val want = model(es, k, rounds)
+        val local = kc(es, k, rounds, GraphOps.LocalFinishMaxEdges)
+        val dist = kc(es, k, rounds, -1)
+        assert(local == want, s"graph $i k=$k rounds=$rounds: driver finish")
+        assert(dist == want, s"graph $i k=$k rounds=$rounds: distributed")
+        if (k > maxDeg) assert(want.isEmpty)
+      }
+    }
+    // the tail graph's caps really cut the peel before convergence
+    assert(model(tailed, 2, 1) != model(tailed, 2, 2))
+    assert(model(tailed, 2, 2) != model(tailed, 2, 8))
+    val empty = Seq.empty[(Long, Long)]
+    assert(kc(empty, 2, 8, GraphOps.LocalFinishMaxEdges).isEmpty)
+    assert(kc(empty, 2, 8, -1).isEmpty)
+  }
+
   test("fixed-point pagerank is bit-identical under different partitionings") {
     val knn = SimilarityOps.knnGraph(
       graft.Tables.embeddings(spark, "/root/testdata/sf0.001"), k = 5,
@@ -592,7 +651,7 @@ class GraphSpec extends SparkSpec {
     val graphs = Seq(bowties(4), bowties(7), random(30, 8), random(60, 3))
     graphs.zipWithIndex.foreach { case (es, i) =>
       val want = sccModel(es)
-      val (local, localPivots) = sccOf(es, GraphOps.SccLocalFinishMaxEdges)
+      val (local, localPivots) = sccOf(es, GraphOps.LocalFinishMaxEdges)
       val (dist, distPivots) = sccOf(es, -1)
       assert(local == want, s"graph $i: serial finish differs from Tarjan")
       assert(dist == want, s"graph $i: distributed path differs from Tarjan")
