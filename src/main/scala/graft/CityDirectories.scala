@@ -58,7 +58,8 @@ object CityDirectories {
 
   /** `geocode` step (city-directories.js:272-323): broadcast-lookup every
     * parsed location in a packed [[graft.geocode.GeoIndex]], misses
-    * in-band.
+    * in-band. One native `geocode` expression per line, so the step runs
+    * in the codegen stage that parses the line.
     */
   def geocode(spark: SparkSession, lines: DataFrame,
               dim: Dataset[GeoAddress]): DataFrame =
@@ -66,9 +67,11 @@ object CityDirectories {
 
   /** `transform` step (city-directories.js:338-451): tagged union of
     * object/relation/log records, generated in one pass over `geocoded`
-    * (see [[TransformOps.taggedUnion]]). A union of one branch per record
-    * kind would re-run the uncached scan → detect → parse → geocode
-    * lineage once per branch.
+    * by `inline` over one native `tagged_records` expression per line
+    * (see [[TransformOps.taggedUnion]]), in the same codegen stage as
+    * `parse` and `geocode`. A union of one branch per record kind would
+    * re-run the uncached scan → detect → parse → geocode lineage once
+    * per branch.
     */
   def transform(geocoded: DataFrame): DataFrame =
     TransformOps.taggedUnion(geocoded)

@@ -4,10 +4,15 @@ import graft.model._
 import graft.parse.RegexChars
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.api.java.UDF1
-import org.apache.spark.sql.catalyst.ScalaReflection
+import org.apache.spark.sql.catalyst.{InternalRow, ScalaReflection}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import scala.jdk.CollectionConverters._
 
 /** Historical-street geocoder: the reference's per-address lookup against
@@ -32,7 +37,9 @@ import scala.jdk.CollectionConverters._
   *  - each line's `parsed.locations` array is mapped through the
   *    broadcast index in one row-local pass, so per-line result arrays
   *    keep their order and the fact side NEVER shuffles — same plan
-  *    shape at 60k rows and at 100 TB;
+  *    shape at 60k rows and at 100 TB. The pass is a native expression
+  *    ([[GeocodeExpr]]): one kernel call per line inside whole-stage
+  *    codegen, writing Spark's internal rows straight from the index;
   *  - a miss is data, not an exception: `{found:false, error}`.
   *
   * `geocodeViaJoin` is the explode → broadcast-equi-join → re-collect
@@ -161,31 +168,27 @@ object Geocoder {
     spark.sparkContext.broadcast(GeoIndex.build(dim.collect()))
 
   /** The `geocoded` column's type: what a typed Scala UDF returning
-    * `Seq[Geocoded]` declares. Derived once, so [[geocode]] builds its
-    * UDF without the per-call TypeTag reflection of `udf { … }`.
+    * `Seq[Geocoded]` declares, so every geocode path yields one type.
     */
-  private lazy val geocodedType: DataType =
+  private[graft] lazy val geocodedType: DataType =
     ScalaReflection.schemaFor[Seq[Geocoded]].dataType
 
+  /** The location values of `locationsCol` (an array of
+    * `struct<value>`), resolved as a column name, never spliced into SQL
+    * text: a name with a space or a backtick stays a name.
+    */
+  private def locationValues(locationsCol: String): Column =
+    col(locationsCol).getField("value")
+
   /** Attach `geocoded: array<struct<found,result,error>>` aligned 1:1
-    * with `parsed.locations` (city-directories.js:294-315).
+    * with `parsed.locations` (city-directories.js:294-315): one
+    * [[GeocodeExpr]] per line, which probes the broadcast index and
+    * writes the array without a UDF's type conversions.
     */
   def geocode(df: DataFrame, index: Broadcast[GeoIndex],
-              locationsCol: String = "parsed.locations"): DataFrame = {
-    val lookup = udf(new UDF1[Seq[String], Seq[Geocoded]] {
-      def call(locations: Seq[String]): Seq[Geocoded] =
-        if (locations == null) Seq.empty
-        else locations.map { value =>
-          index.value.get(normalizeAddress(value)) match {
-            case Some(r) => Geocoded(found = true, Some(r), None)
-            case None => Geocoded(found = false, None,
-              Some(s"Address not found: $value"))
-          }
-        }
-    }, geocodedType)
-    df.withColumn("geocoded",
-      lookup(expr(s"transform($locationsCol, l -> l.value)")))
-  }
+              locationsCol: String = "parsed.locations"): DataFrame =
+    df.withColumn("geocoded", ColumnBridge.column(GeocodeExpr(
+      ColumnBridge.expression(locationValues(locationsCol)), index)))
 
   /** Bounded Levenshtein distance (early-exit when the running minimum
     * of a row exceeds `max` — O(len·max) not O(len²)).
@@ -356,7 +359,7 @@ object Geocoder {
       }
     }
     df.withColumn("geocoded",
-      lookup(expr(s"transform($locationsCol, l -> l.value)")))
+      lookup(locationValues(locationsCol)))
   }
 
   /** Driver-safety guardrail for [[geocodeAuto]]: the largest dimension
@@ -407,7 +410,7 @@ object Geocoder {
   private def explodeLocations(df: DataFrame, rowId: String,
                                locationsCol: String): DataFrame =
     df.select(col(rowId).as("_gid"),
-        posexplode(expr(s"transform($locationsCol, l -> l.value)"))
+        posexplode(locationValues(locationsCol))
           .as(Seq("_pos", "_addr")))
       .withColumn("_key", normalizeAddress(col("_addr")))
 
@@ -588,4 +591,54 @@ object Geocoder {
     else
       geocodeFuzzyViaJoin(df, dim.toDF(), rowId, locationsCol, maxEdit,
         maxBlockSize)
+}
+
+/** Whole-stage-codegen form of the exact geocoder (the [[graft.parse
+  * .ParseEntryExpr]] pattern): over a line's location values, one static
+  * call into [[GeoIndex.geocoded]] returns the `geocoded` array as Spark
+  * internal rows, so the step runs inside the stage that parses the
+  * line, with no UDF boundary and no per-row type conversion.
+  *
+  * The broadcast rides the serialized expression; each generated class
+  * fetches its value once, when the class is set up on the executor. A
+  * null array yields an empty one, so `nullable` is false.
+  */
+case class GeocodeExpr(child: Expression, index: Broadcast[GeoIndex])
+  extends UnaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(_: StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"geocode expects array<string>, got ${other.simpleString}")
+  }
+
+  override def dataType: DataType = Geocoder.geocodedType
+
+  override def nullable: Boolean = false
+
+  @transient private lazy val localIndex: GeoIndex = index.value
+
+  override def eval(input: InternalRow): Any =
+    localIndex.geocoded(child.eval(input).asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    val bc = ctx.addReferenceObj("geoIndexBroadcast", index,
+      classOf[Broadcast[_]].getName)
+    val idx = ctx.addMutableState(classOf[GeoIndex].getName, "geoIndex",
+      v => s"$v = (${classOf[GeoIndex].getName}) $bc.value();")
+    ev.copy(code = code"""
+      ${c.code}
+      org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
+        $idx.geocoded(${c.isNull} ? null : ${c.value});""",
+      isNull = FalseLiteral)
+  }
+
+  // the broadcast is state, not an argument: plans print `geocode(…)`
+  override protected def flatArguments: Iterator[Any] = Iterator(child)
+
+  override protected def withNewChildInternal(c: Expression): GeocodeExpr =
+    copy(child = c)
+
+  override def prettyName: String = "geocode"
 }

@@ -102,20 +102,4 @@ object CityDirOps {
     */
   def firstElement(arr: Column): Column =
     when(arr.isNotNull && size(arr) > 0, element_at(arr, 1))
-
-  /** O-35: `makeMultiPoint` (city-directories.js:325-336) over the
-    * normalized geometry representation (coordinates always
-    * array<array<double>>; a Point has one outer element):
-    * 0 geometries → null, 1 → the geometry unchanged, n → MultiPoint of
-    * all coordinates. A within-row higher-order fold — no aggregation
-    * shuffle.
-    */
-  def multiPoint(geometries: Column): Column =
-    when(geometries.isNull || size(geometries) === 0, lit(null))
-      .when(size(geometries) === 1, element_at(geometries, 1))
-      .otherwise(
-        struct(
-          lit("MultiPoint").as("type"),
-          flatten(transform(geometries, g => g.getField("coordinates")))
-            .as("coordinates")))
 }

@@ -91,7 +91,7 @@ class GeocoderSpec extends SparkSpec {
       .withColumn("parsed", struct(expr(
         "transform(vals, v -> struct(v as value))").as("locations")))
       .drop("vals")
-    val viaUdf = Geocoder.geocode(lines, Geocoder.buildIndex(spark, dim))
+    val viaIndex = Geocoder.geocode(lines, Geocoder.buildIndex(spark, dim))
       .select(col("id"),
         expr("transform(geocoded, g -> struct(g.found, g.result.properties.address.id, g.error))").as("g"))
       .orderBy("id").collect().toSeq
@@ -99,7 +99,7 @@ class GeocoderSpec extends SparkSpec {
       .select(col("id"),
         expr("transform(geocoded, g -> struct(g.found, g.result.properties.address.id, g.error))").as("g"))
       .orderBy("id").collect().toSeq
-    assert(viaUdf.map(_.toString) == viaJoin.map(_.toString))
+    assert(viaIndex.map(_.toString) == viaJoin.map(_.toString))
   }
 
   test("geocodeAuto: dimension size picks the path; results agree across it") {
@@ -366,5 +366,23 @@ class GeocoderSpec extends SparkSpec {
     val got = Geocoder.geocode(lines, Geocoder.buildIndex(spark,
       spark.createDataset(CityDirFixture.dimension))).schema("geocoded")
     assert(got.dataType == typed)
+  }
+
+  test("a locations column named with a space or a backtick resolves on every path") {
+    val dim = spark.createDataset(CityDirFixture.dimension)
+    val lines = Seq((1L, Seq("123 Broadway", "nowhere special"))).toDF("id", "vals")
+      .withColumn("my locs", expr("transform(vals, v -> struct(v as value))"))
+      .drop("vals")
+    def found(df: org.apache.spark.sql.DataFrame): Seq[Boolean] =
+      df.select(expr("transform(geocoded, g -> g.found)")).as[Seq[Boolean]].head()
+    val index = Geocoder.buildIndex(spark, dim)
+    assert(found(Geocoder.geocode(lines, index, "my locs")) == Seq(true, false))
+    assert(found(Geocoder.geocodeFuzzy(lines,
+      Geocoder.buildFuzzyIndex(spark, dim), "my locs")) == Seq(true, false))
+    assert(found(Geocoder.geocodeViaJoin(lines, dim.toDF(), "id", "my locs")) ==
+      Seq(true, false))
+    val ticked = lines.withColumnRenamed("my locs", "my`locs")
+    assert(found(Geocoder.geocode(ticked, index, "`my``locs`")) ==
+      Seq(true, false))
   }
 }

@@ -2,7 +2,9 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 class CityDirOpsSpec extends SparkSpec {
   import spark.implicits._
@@ -49,15 +51,20 @@ class CityDirOpsSpec extends SparkSpec {
   }
 
   test("multiPoint: 0 → null, 1 → unchanged, n → MultiPoint") {
+    // the record builder's kernel, on Catalyst values of the normalized
+    // geometry type; results read back as rows
+    val geometryType = StructType(Seq(StructField("type", StringType),
+      StructField("coordinates", ArrayType(ArrayType(DoubleType, false)))))
+    def geometry(kind: String, points: Seq[Seq[Double]]): InternalRow =
+      CatalystTypeConverters.createToCatalystConverter(geometryType)(
+        Row(kind, points)).asInstanceOf[InternalRow]
+    val toRow = CatalystTypeConverters.createToScalaConverter(geometryType)
     val geoms = Seq(
-      Seq.empty[(String, Seq[Seq[Double]])],
-      Seq(("Point", Seq(Seq(1.0, 2.0)))),
-      Seq(("Point", Seq(Seq(1.0, 2.0))), ("Point", Seq(Seq(3.0, 4.0))))
-    ).toDF("gs")
-      .select(CityDirOps.multiPoint(
-        expr("transform(gs, g -> struct(g._1 as type, g._2 as coordinates))"))
-        .as("geom"))
-      .collect()
+      Array.empty[InternalRow],
+      Array(geometry("Point", Seq(Seq(1.0, 2.0)))),
+      Array(geometry("Point", Seq(Seq(1.0, 2.0))),
+        geometry("Point", Seq(Seq(3.0, 4.0))))
+    ).map(gs => Row(toRow(TaggedRecords.multiPoint(gs))))
     assert(geoms(0).isNullAt(0))
     val single = geoms(1).getStruct(0)
     assert(single.getString(0) == "Point")

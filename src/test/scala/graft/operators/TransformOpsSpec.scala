@@ -2,14 +2,24 @@ package graft.operators
 
 import graft.{CityDirectories, SparkSpec}
 import graft.fixtures.CityDirFixture
+import graft.geocode.GeocodeExpr
 import graft.model.{GeoProperties, GeoRef, GeoResult, Geocoded, Geometry,
   Location, ParsedEntry}
+import graft.parse.ParseEntryExpr
 import graft.sources.Manifest
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.execution.{FileSourceScanExec, UnionExec}
+import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, ArrayTransform,
+  LambdaFunction, ScalaUDF}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec,
+  InputAdapter, QueryExecution, SortExec, SparkPlan, UnionExec,
+  WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
+import org.apache.spark.sql.util.QueryExecutionListener
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** One geocoded line as the `transform` step receives it. */
 final case class GeocodedLine(
@@ -46,6 +56,71 @@ class TransformOpsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
     assert(scans.size == 1, plan)
     assert(collect(plan) { case u: UnionExec => u }.isEmpty, plan)
+  }
+
+  test("write plan: parse, geocode, records and the sink's sort in one codegen stage") {
+    val dir = Files.createTempDirectory("graft-fixture").toString
+    CityDirFixture.ensure(dir)
+    val manifest = Manifest.load(spark,
+      Files.readString(Paths.get(dir, "manifest.html")))
+    val union = CityDirectories.transform(CityDirectories.geocode(spark,
+      CityDirectories.parse(spark, manifest, dir),
+      spark.createDataset(CityDirFixture.dimension)))
+    // the write's own executed plan, as the session reports it
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    def writePlan = plans.asScala.find(p =>
+      collect(p) { case w: DataWritingCommandExec => w }.nonEmpty)
+    try {
+      CityDirectories.writeUnion(union,
+        Files.createTempDirectory("graft-sink").resolve("out").toString)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (writePlan.isEmpty && System.nanoTime() < deadline)
+        Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    val plan = writePlan.getOrElse(fail("no write plan reported"))
+
+    // a stage's own operators: its tree down to the input adapters
+    def stageNodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case _: InputAdapter => Nil
+      case _ => p.children.flatMap(stageNodes)
+    })
+    val generate = collect(plan) { case g: GenerateExec => g }
+    assert(generate.size == 1, plan)
+    val stage = collect(plan) { case w: WholeStageCodegenExec => w }
+      .filter(w => stageNodes(w.child).exists(_ eq generate.head))
+    assert(stage.size == 1, s"Generate is not whole-stage codegen'd:\n$plan")
+    val fused = stageNodes(stage.head.child)
+    val fusedExprs = fused.flatMap(_.expressions)
+    assert(fused.exists(_.isInstanceOf[SortExec]), plan)
+    assert(fusedExprs.exists(_.exists(_.isInstanceOf[ParseEntryExpr])), plan)
+    assert(fusedExprs.exists(_.exists(_.isInstanceOf[GeocodeExpr])), plan)
+
+    val interpreted = collect(plan) { case p => p.expressions }.flatten
+      .flatMap(_.collect {
+        case e @ (_: ScalaUDF | _: ArrayTransform | _: ArrayFilter |
+                  _: LambdaFunction) => e.nodeName
+      })
+    assert(interpreted.isEmpty, plan)
+    val scans = collect(plan) {
+      case s: FileSourceScanExec
+          if s.relation.fileFormat.isInstanceOf[BinaryFileFormat] => s
+    }
+    assert(scans.size == 1, plan)
+    assert(collect(plan) { case u: UnionExec => u }.isEmpty, plan)
+
+    // a method past the limit makes the stage fall back to interpreted
+    // execution when it runs, with the plan unchanged
+    val (_, source) = stage.head.doCodeGen()
+    val (_, stats) = CodeGenerator.compile(source)
+    val limit = spark.conf.get("spark.sql.codegen.hugeMethodLimit").toInt
+    assert(stats.maxMethodCodeSize <= limit,
+      s"largest method ${stats.maxMethodCodeSize} B > $limit B")
   }
 
   // hand-built input: the lines the fixture and the generated corpus never
