@@ -4,8 +4,8 @@ import graft.geocode.Geocoder
 import graft.model.{DirectoryMeta, GeoAddress, LineRecord}
 import graft.operators.{CityDirOps, TransformOps}
 import graft.parse.EntryParser
-import graft.sources.{Hocr, HocrArchive}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import graft.sources.{Hocr, HocrArchive, UnionSink}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The four reference steps (`module.exports.steps`,
@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   *
   * The whole reference dataflow is map-only (SURVEY.md §4: zero wide
   * dependencies); this implementation preserves that: parse/geocode/
-  * transform produce NO shuffle — the only exchanges are the optional
-  * sink `partitionBy` and the `geocodeViaJoin` variant's re-collect.
+  * transform produce NO shuffle and the sink no sort — the only exchange
+  * is the `geocodeViaJoin` variant's re-collect.
   * Every step is also a single pass over its input: chained uncached,
   * `writeUnion(transform(geocode(parse(…))))` reads each archive once.
   */
@@ -78,20 +78,11 @@ object CityDirectories {
 
   /** Union sink (SURVEY.md O-9): the reference writes records one at a
     * time through a single writer (`.series()`, city-directories.js:449);
-    * here one partition-parallel NDJSON write, partitioned by record kind.
+    * here one partition-parallel NDJSON write through [[UnionSink]], one
+    * directory per record kind. Each task writes its rows as they come,
+    * one open file per kind, so the sink adds no sort and no stage to the
+    * fused job; a failed write leaves the previous output in place.
     */
   def writeUnion(df: DataFrame, path: String): Unit =
-    df.withColumn("geometry", geometryJson(col("geometry")))
-      .write.mode("overwrite").partitionBy("type").json(path)
-
-  /** Normalized geometry → exact GeoJSON text: Point coordinates unwrap
-    * back to a flat pair (see model.Geometry).
-    */
-  def geometryJson(g: Column): Column =
-    when(g.isNull, lit(null).cast("string"))
-      .when(g.getField("type") === "Point",
-        to_json(struct(
-          g.getField("type").as("type"),
-          element_at(g.getField("coordinates"), 1).as("coordinates"))))
-      .otherwise(to_json(g))
+    df.write.format(classOf[UnionSink].getName).mode("overwrite").save(path)
 }

@@ -32,8 +32,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * evaluates outside whole-stage codegen: with no lambda and no UDF in
   * it, the `inline` generator runs in the same codegen stage as the
   * parse and geocode steps before it. No shuffle. Write side:
-  * `partitionBy("type")` gives the reference's per-kind outputs in one
-  * pass.
+  * `CityDirectories.writeUnion` gives the reference's per-kind outputs
+  * in the same pass, each task writing its rows as they come, one file
+  * per kind, with no sort.
   *
   * Input columns: uuid, yearMin, yearMax, pageUuid, pageNum, bbox, text,
   * parsed (struct), geocoded (array<struct<found,result,error>>).

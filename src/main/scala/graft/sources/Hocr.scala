@@ -70,26 +70,55 @@ object Hocr {
 
   /** The next line start tag at or after `from`, packed as
     * `start << 32 | end` (end exclusive), or -1.
+    *
+    * Word spans are skipped without a look at their attributes. A line
+    * tag's qualifying class value holds an `ocr_line` that starts after
+    * the tag's name; take the first such `ocr_line` (at `o`). The value
+    * opens before the tag's first `>` and holds no quote, so it closes
+    * before that `>` or at the first quote after it, and in both cases
+    * no quote lies between the tag's first `>` and `o + 8`. Let `q` be
+    * the last quote before `o + 8` and `g` the last `>` at or before
+    * `q`: a tag that opens before `g` has its first `>` at or before
+    * `g`, so `q` lies between that `>` and `o + 8`, and it is no line
+    * tag. The scan goes on from `g`.
     */
   private def nextLineTag(s: String, from: Int): Long = {
     var p = s.indexOf('<', from)
+    var ocrLine = -1 // the first `ocr_line` at or after p's name
     while (p >= 0) {
-      val end = lineTagEnd(s, p)
-      if (end >= 0) return (p.toLong << 32) | end
-      p = s.indexOf('<', p + 1)
+      val nameEnd = lineTagNameEnd(s, p)
+      if (nameEnd >= 0 && ocrLine < nameEnd) {
+        ocrLine = s.indexOf("ocr_line", nameEnd)
+        if (ocrLine < 0) return -1L
+        // q and g, searched back no further than p: linear in the page
+        var gt = math.min(ocrLine + 7, s.length - 1)
+        while (gt > p && !isQuote(s.charAt(gt))) gt -= 1
+        while (gt > p && s.charAt(gt) != '>') gt -= 1
+        if (gt > p) p = s.indexOf('<', gt)
+      } else if (nameEnd >= 0) {
+        val end = lineTagEnd(s, nameEnd)
+        if (end >= 0) return (p.toLong << 32) | end
+        p = s.indexOf('<', p + 1)
+      } else p = s.indexOf('<', p + 1)
     }
     -1L
   }
 
-  /** End (exclusive) of the line start tag opening at `p`, or -1. */
-  private def lineTagEnd(s: String, p: Int): Int = {
+  /** End of the element name of a `span`, `div` or `p` start tag opening
+    * at `p`, or -1 if no such tag opens there. */
+  private def lineTagNameEnd(s: String, p: Int): Int = {
     val nameLen =
       if (s.startsWith("span", p + 1)) 4
       else if (s.startsWith("div", p + 1)) 3
       else if (s.startsWith("p", p + 1)) 1
       else return -1
     val nameEnd = p + 1 + nameLen
-    if (RegexChars.continuesWord(s, nameEnd)) return -1
+    if (RegexChars.continuesWord(s, nameEnd)) -1 else nameEnd
+  }
+
+  /** End (exclusive) of the line start tag whose name ends at `nameEnd`,
+    * or -1. */
+  private def lineTagEnd(s: String, nameEnd: Int): Int = {
     val firstGt = s.indexOf('>', nameEnd)
     if (firstGt < 0) return -1
     // from the last `class=` whose opening quote still sits before firstGt

@@ -93,8 +93,11 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("geometry JSON restores exact GeoJSON (Point unwrap)") {
-    val js = union.filter(col("type") === "object" && col("geometry").isNotNull)
-      .select(CityDirectories.geometryJson(col("geometry")).as("j"))
+    // as the sink writes it: GeoJSON text in each object record
+    val out = Files.createTempDirectory("graft-out").toString
+    CityDirectories.writeUnion(union, out)
+    val js = spark.read.json(s"$out/type=object")
+      .filter(col("geometry").isNotNull).select("geometry")
       .as[String].collect()
     assert(js.exists(_.startsWith("""{"type":"Point","coordinates":[-""")))
     assert(js.exists(_.startsWith("""{"type":"MultiPoint","coordinates":[[-""")))

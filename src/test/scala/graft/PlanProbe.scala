@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.v2.V2TableWriteExec
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Dev-only: print a query's final adaptive plan (`sbt "Test/runMain
@@ -43,8 +44,7 @@ object PlanProbe {
     // listener events arrive on the listener bus, after the action
     Thread.sleep(2000)
     actions.toArray(Array.empty[(String, QueryExecution)])
-      .filter { case (_, qe) =>
-        !writesOnly || qe.executedPlan.isInstanceOf[DataWritingCommandExec] }
+      .filter { case (_, qe) => !writesOnly || isWrite(qe.executedPlan) }
       .zipWithIndex.foreach { case ((f, qe), i) =>
         val plan = masks.foldLeft(finalPlan(qe)) { case (p, (from, to)) =>
           p.replaceAll(from, to) }
@@ -65,6 +65,11 @@ object PlanProbe {
       // a lambda class's name and identity change from run to run
       """\$Lambda\$[^,\s]*""" -> "\\$Lambda")
   }
+
+  /** A V1 file write or a V2 sink's write. */
+  private def isWrite(p: SparkPlan): Boolean =
+    p.isInstanceOf[DataWritingCommandExec] ||
+      p.find(_.isInstanceOf[V2TableWriteExec]).isDefined
 
   private def finalPlan(qe: QueryExecution): String =
     qe.executedPlan match {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{CityDirectories, SparkSpec}
+import graft.{CityDirectories, SparkJsonUnionOracle, SparkSpec}
 import graft.fixtures.CityDirFixture
 import graft.geocode.{GeocodeUdfOracle, Geocoder}
 import graft.model.{GeoAddress, GeoProperties, GeoRef, GeoResult, Geometry,
@@ -44,9 +44,11 @@ final case class LooseLine(
 
 /** The native `geocode` and `tagged_records` expressions against the
   * forms they replaced ([[GeocodeUdfOracle]], [[TaggedUnionOracle]]):
-  * whole rows, the union's schema, and the NDJSON `writeUnion` writes,
-  * byte for byte, on the fixture corpus and on seeded lines that hold
-  * every null and edge case the pipeline can meet.
+  * whole rows, the union's schema, and the NDJSON `writeUnion` writes
+  * against what Spark's JSON writer makes of the oracle union
+  * ([[SparkJsonUnionOracle]]), byte for byte, on the fixture corpus and
+  * on seeded lines that hold every null and edge case the pipeline can
+  * meet.
   */
 class TaggedUnionParitySpec extends SparkSpec {
   import spark.implicits._
@@ -62,10 +64,12 @@ class TaggedUnionParitySpec extends SparkSpec {
   }
 
   /** Each `type=` directory's part files, in part order, as text that
-    * equals another only if the bytes do. */
-  private def ndjson(union: DataFrame): Map[String, Seq[String]] = {
+    * equals another only if the bytes do, written by `write`. */
+  private def ndjson(union: DataFrame,
+                     write: (DataFrame, String) => Unit =
+                       CityDirectories.writeUnion): Map[String, Seq[String]] = {
     val out = Files.createTempDirectory("graft-ndjson").resolve("out")
-    CityDirectories.writeUnion(union, out.toString)
+    write(union, out.toString)
     def list(p: Path) = Files.list(p).iterator().asScala.toSeq
     list(out).filter(Files.isDirectory(_)).map { dir =>
       dir.getFileName.toString -> list(dir)
@@ -87,7 +91,9 @@ class TaggedUnionParitySpec extends SparkSpec {
     val oracleUnion = TaggedUnionOracle.taggedUnion(oracle)
     assert(union.schema == oracleUnion.schema)
     assertSameRows(union, oracleUnion)
-    val (written, oracleWritten) = (ndjson(union), ndjson(oracleUnion))
+    // the sink over the native union, Spark's JSON writer over the oracle's
+    val (written, oracleWritten) =
+      (ndjson(union), ndjson(oracleUnion, SparkJsonUnionOracle.writeUnion))
     assert(written.keySet == Set("type=object", "type=relation", "type=log"))
     assert(written == oracleWritten)
   }

@@ -9,14 +9,14 @@ import graft.parse.ParseEntryExpr
 import graft.sources.Manifest
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, ArrayTransform,
-  LambdaFunction, ScalaUDF}
+  LambdaFunction, ScalaUDF, StructsToJson}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec,
   InputAdapter, QueryExecution, SortExec, SparkPlan, UnionExec,
   WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
+import org.apache.spark.sql.execution.datasources.v2.V2TableWriteExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
@@ -58,7 +58,7 @@ class TransformOpsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(collect(plan) { case u: UnionExec => u }.isEmpty, plan)
   }
 
-  test("write plan: parse, geocode, records and the sink's sort in one codegen stage") {
+  test("write plan: one codegen stage into the V2 sink, no sort") {
     val dir = Files.createTempDirectory("graft-fixture").toString
     CityDirFixture.ensure(dir)
     val manifest = Manifest.load(spark,
@@ -75,7 +75,7 @@ class TransformOpsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
     spark.listenerManager.register(listener)
     def writePlan = plans.asScala.find(p =>
-      collect(p) { case w: DataWritingCommandExec => w }.nonEmpty)
+      collect(p) { case w: V2TableWriteExec => w }.nonEmpty)
     try {
       CityDirectories.writeUnion(union,
         Files.createTempDirectory("graft-sink").resolve("out").toString)
@@ -97,14 +97,15 @@ class TransformOpsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(stage.size == 1, s"Generate is not whole-stage codegen'd:\n$plan")
     val fused = stageNodes(stage.head.child)
     val fusedExprs = fused.flatMap(_.expressions)
-    assert(fused.exists(_.isInstanceOf[SortExec]), plan)
     assert(fusedExprs.exists(_.exists(_.isInstanceOf[ParseEntryExpr])), plan)
     assert(fusedExprs.exists(_.exists(_.isInstanceOf[GeocodeExpr])), plan)
 
+    // the sink neither sorts nor goes through to_json
+    assert(collect(plan) { case s: SortExec => s }.isEmpty, plan)
     val interpreted = collect(plan) { case p => p.expressions }.flatten
       .flatMap(_.collect {
         case e @ (_: ScalaUDF | _: ArrayTransform | _: ArrayFilter |
-                  _: LambdaFunction) => e.nodeName
+                  _: LambdaFunction | _: StructsToJson) => e.nodeName
       })
     assert(interpreted.isEmpty, plan)
     val scans = collect(plan) {

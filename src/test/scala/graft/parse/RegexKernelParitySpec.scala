@@ -99,6 +99,64 @@ class RegexKernelParitySpec extends AnyFunSuite {
     ).foreach(assertSameLines)
   }
 
+  // where `nextLineTag`'s word-span skip could drift from the full scan: a
+  // `>` inside a quoted class value, `class=` inside other attribute
+  // values, `ocr_line` in a title or in the text, and quotes in the text
+  // between a word span's first `>` and the next `ocr_line`
+  private val trickyTags = Vector(
+    "<span class='x>y ocr_line' title='bbox 1 2 3 4'>",
+    "<span title='bbox 1 2 3 4' class='>ocr_line'>",
+    "<span class=\"a > ocr_line\" title=\"bbox 5 6 7 8\">",
+    "<span class='ocrx_word>' title='bbox 1 2 3 4'>",
+    "<span title=\"class='ocr_line' bbox 1 2 3 4\">",
+    "<span id='class=' class='ocrx_word' title='bbox 1 2 3 4'>",
+    "<span data-c='class=\"ocr_line\"' class='ocr_line' title='bbox 3 4 5 6'>",
+    "<span data-c='class=\"ocr_line\"' class='ocrx_word' title='bbox 3 4 5 6'>",
+    "<span class='ocrx_word' title='ocr_line bbox 1 2 3 4'>",
+    "<span class='ocrx_word' title='bbox 1 2 3 4; x ocr_line'>",
+    "<span class='ocrx_word' title='bbox 1 2 3 4'>ocr_line</span>",
+    "<span class='ocrx_word ocr_lin' title='bbox 1 2 3 4'>",
+    "<span class='ocr_line' title='bbox 9 9 9 9'>",
+    "<span class=ocr_line title='bbox 1 2 3 4'>",
+    "<span class='ocrx_word' title='bbox 1 2 3 4'>")
+
+  private val trickyContent = Vector(
+    "ocr_line", "'ocr_line'", "\"ocr_line\"", "class='ocr_line'", "'", "\"",
+    "x'y", "ocr_line'", "'ocr_lin", "e", ">", "> ocr_line'", "class=",
+    "<span class='ocrx_word' title='bbox 1 2 2 4'>Jones</span>", "</span>",
+    "Smith", " ")
+
+  test("parseLines matches the regex form where the word-span skip could drift") {
+    val rnd = new Random(17)
+    (0 until 3000).foreach { _ =>
+      val sb = new StringBuilder
+      (0 until 1 + rnd.nextInt(6)).foreach { _ =>
+        sb.append(pick(rnd, trickyTags))
+        (0 until rnd.nextInt(5)).foreach(_ => sb.append(pick(rnd, trickyContent)))
+      }
+      assertSameLines(sb.toString)
+    }
+    Seq(
+      // the first `>` sits inside the qualifying class value
+      "<span class='a>b ocr_line' title='bbox 1 2 3 4'>Smith",
+      // `ocr_line` only after a quote that follows the first `>`
+      "<span class='ocrx_word'>x'ocr_line' title='bbox 1 2 3 4'>Smith",
+      // the value closes after the first `>`, at the first quote past it
+      "<span class='w>ocr_line' title='bbox 1 2 3 4'>a<span class='x'>b",
+      // `ocr_line` in the text, no quote after it
+      "<span class='ocrx_word' title='bbox 1 2 3 4'>ocr_line",
+      "<span class='ocrx_word' title='bbox 1 2 3 4'>ocr_lin",
+      "<span title='bbox 1 2 3 4' class='ocr_line",
+      // a line tag straight after a word span, and after an `ocr_line` in
+      // a word's text with a quote before it
+      "<span class='ocrx_word'>a</span><span class='ocr_line' title='bbox 1 2 3 4'>b",
+      "<span class='w'>it's ocr_line</span><span class='ocr_line' title='bbox 1 2 3 4'>b",
+      // a quote of the other kind closes the value before `ocr_line`
+      "<span class=\"a>'b ocr_line\" title='bbox 1 2 3 4'>Smith",
+      "<span class='a>\"b ocr_line' title='bbox 1 2 3 4'>Smith"
+    ).foreach(assertSameLines)
+  }
+
   // around abbreviations: Unicode letters and digits, `_`, combining
   // marks (also after a supplementary letter), dotted capital I (which
   // lowercases to i + a mark), letter-like numbers that are no letters
