@@ -12,7 +12,8 @@ import org.apache.spark.sql.types._
   * built-ins can only express via zip_with + three aggregate folds, each
   * materializing an intermediate array per row).
   *
-  * One codegen'd loop, three float accumulators, zero allocations.
+  * One loop ([[CosineF32.cosine]], which the generated code calls),
+  * three float accumulators, zero allocations.
   * Arithmetic is bit-identical to the HOF version (and to engines that
   * keep FLOAT[] kernels in single precision): float multiply-accumulate
   * in element order, float sqrt (double sqrt of a float rounds exactly
@@ -40,7 +41,33 @@ case class CosineF32(left: Expression, right: Expression)
     // length mismatch → null, exactly like the HOF kernel (zip_with
     // pads the shorter side with nulls, nulling the whole fold) — a
     // truncated prefix similarity would be a silent wrong answer
-    if (x.numElements() != y.numElements()) return null
+    if (x.numElements() != y.numElements()) null
+    else CosineF32.cosine(x, y)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => s"""
+        if ($a.numElements() != $b.numElements()) {
+          ${ev.isNull} = true;
+        } else {
+          ${ev.value} = ${classOf[CosineF32].getName}.cosine($a, $b);
+        }
+      """)
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): CosineF32 =
+    copy(left = newLeft, right = newRight)
+
+  override def prettyName: String = "cosine_f32"
+}
+
+object CosineF32 {
+  /** The float32 cosine of two equal-length float arrays: the one loop
+    * behind the expression (interpreted and generated code) and the
+    * driver-side callers that must agree with it bit for bit
+    * (`SimilarityOps.semanticDedup`'s driver path). A zero-norm side
+    * gives NaN. */
+  def cosine(x: ArrayData, y: ArrayData): Double = {
     val n = x.numElements()
     var dot = 0.0f; var na = 0.0f; var nb = 0.0f
     var i = 0
@@ -53,41 +80,6 @@ case class CosineF32(left: Expression, right: Expression)
       math.sqrt(nb.toDouble).toFloat)).toDouble
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val xi = ctx.freshName("xi")
-      val yi = ctx.freshName("yi")
-      s"""
-        if ($a.numElements() != $b.numElements()) {
-          ${ev.isNull} = true;
-        } else {
-          int $n = $a.numElements();
-          float $dot = 0.0f; float $na = 0.0f; float $nb = 0.0f;
-          for (int $i = 0; $i < $n; $i++) {
-            float $xi = $a.getFloat($i);
-            float $yi = $b.getFloat($i);
-            $dot += $xi * $yi; $na += $xi * $xi; $nb += $yi * $yi;
-          }
-          ${ev.value} = (double)($dot /
-            ((float) java.lang.Math.sqrt((double) $na) *
-             (float) java.lang.Math.sqrt((double) $nb)));
-        }
-      """
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CosineF32 =
-    copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "cosine_f32"
-}
-
-object CosineF32 {
   /** Column-API form. */
   def cosineF32Native(a: Column, b: Column): Column = {
     import org.apache.spark.sql.graft.ColumnBridge

@@ -39,7 +39,10 @@ object DedupOps {
     array_distinct(split(text, " "))
 
   /** Distinct word k-shingles ("a b c" 3-grams) as strings. Row-local:
-    * built with `transform` over index offsets, no explode.
+    * built with `transform` over index offsets, no explode. The
+    * operators use the native `functions.ShingleGen` forms; this
+    * declarative one is the reference the specs compare them against
+    * (ExtOpsSpec's shingle-generator parity tests).
     */
   def shingles(text: Column, k: Int): Column = {
     val w = split(text, " ")
@@ -1303,8 +1306,7 @@ object DedupOps {
                     maxTruthDf: Int = 100000): (DataFrame, () => Unit) = {
     require(maxTruthDf >= 1, s"maxTruthDf must be >= 1: $maxTruthDf")
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-    val grams = graft.Ckpt(df.select(col(idCol).as("_id"),
-        explode(shingles(col(textCol), shingleK)).as("_s"))
+    val grams = graft.Ckpt(distinctShingles(df, idCol, textCol, shingleK)
       .select(col("_id"), unhex(md5(col("_s"))).as("_g")),
       MEMORY_AND_DISK_SER)
     val dfreq = grams.groupBy("_g").agg(count(lit(1)).as("_df"))
@@ -1346,6 +1348,14 @@ object DedupOps {
     (out, () => graft.Release(tagged))
   }
 
+  /** (_id, _s): one row per distinct word k-shingle of each text, the
+    * native generator's rows of `explode(shingles(text, k))`. */
+  private def distinctShingles(df: DataFrame, idCol: String,
+                               textCol: String, k: Int): DataFrame =
+    df.select(col(idCol),
+      graft.functions.ShingleGen.shingleGen(col(textCol), k,
+        distinct = true)).toDF("_id", "_s")
+
   /** The global bias ledger for a capped [[lshRecallEval]]: one row per
     * gram the `maxTruthDf` cap excluded from the truth universe —
     * (gram_digest, df, pair_mass) where pair_mass = df·(df−1)/2 is the
@@ -1359,8 +1369,7 @@ object DedupOps {
     */
   def lshTruthCapReport(df: DataFrame, idCol: String, textCol: String,
                         shingleK: Int, maxTruthDf: Int): DataFrame =
-    df.select(col(idCol).as("_id"),
-        explode(shingles(col(textCol), shingleK)).as("_s"))
+    distinctShingles(df, idCol, textCol, shingleK)
       .select(lower(md5(col("_s"))).as("gram_digest"))
       .groupBy("gram_digest").agg(count(lit(1)).as("df"))
       .filter(col("df") > maxTruthDf)

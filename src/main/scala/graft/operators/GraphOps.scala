@@ -395,6 +395,18 @@ object GraphOps {
     * driver memory, while a round's jobs spread over the executors. */
   private[graft] val LocalFinishMaxEdges = 100000L
 
+  /** The most rows `SimilarityOps.semanticDedup` clusters and pairs on
+    * the driver instead of running its Spark rounds (the same rule as
+    * [[LocalFinishMaxEdges]]). The pair loop's worst case is one
+    * cluster holding every row, n·(n−1)/2 cosines on one thread. Why
+    * 4,000: on 64-dim vectors (4 cores) that worst case took 0.69 s
+    * against 0.82 s for the distributed call at k = 8 and 3.5 s at
+    * k = 1; at 6,000 rows it reached the distributed k = 8 cost
+    * (1.39 s both; PERF.md "SCC and semantic dedup on the driver").
+    * The pair cost grows with the dimension too, so wider vectors
+    * move the crossover down. */
+  private[graft] val LocalDedupMaxRows = 4000
+
   /** k-core: peel nodes of degree < k from the UNDIRECTED graph for up
     * to `maxRounds` rounds (early-stop when a round removes nothing —
     * output-invariant, since further peels would also be no-ops).
@@ -733,7 +745,11 @@ object GraphOps {
     * Algorithm: Multistep (Slota et al. 2014) — FB-Trim (forward-
     * backward reachability with trimming, the standard distributed SCC
     * decomposition, Orzan's coloring family) finished serially once
-    * the remaining problem is small, driven as a DataFrame loop:
+    * the remaining problem is small, driven as a DataFrame loop. The
+    * raw edges are checkpointed and counted first (one job); an input
+    * of at most [[LocalFinishMaxEdges]] edges is already small, so it
+    * skips the loop: it is collected and labelled on the driver as in
+    * step 2, and comes back as one checkpointed frame. Otherwise:
     *
     *  1. TRIM, repeatedly: a node with no in-edge or no out-edge in
     *     the REMAINING subgraph can sit in no cycle — it is a
@@ -741,16 +757,17 @@ object GraphOps {
     *     round, so bow-tie tendrils (the BULK of a web graph: IN/OUT
     *     pages, dead ends) drain in a few rounds at any scale,
     *     without ever paying a reachability pass.
-    *  2. FINISH, when the trimmed remainder holds at most
+    *  2. FINISH, when a trim fixpoint leaves at most
     *     [[LocalFinishMaxEdges]] edges: collect them and label every
     *     remaining node with an iterative Tarjan on the driver. At the
     *     trim fixpoint every remaining node has an in- and an out-edge,
     *     and after a pivot round the edges are intra-region only (no
     *     SCC crosses regions), so the collected edges are the whole
-    *     remaining problem. A pivot round is dozens of tiny driver-
-    *     synchronous jobs whatever the core's size; on a small core
-    *     the collect and the serial pass cost a fraction of one round
-    *     (PERF.md "SCC serial finish").
+    *     remaining problem. A trim or pivot round is several tiny
+    *     driver-synchronous jobs whatever the graph's size; on a small
+    *     graph the collect and the serial pass cost a fraction of one
+    *     round (PERF.md "SCC serial finish", "SCC and semantic dedup
+    *     on the driver").
     *  3. Otherwise PIVOT, one per REGION per round (parallel FB):
     *     regions seed as the weak components of the trimmed core and
     *     refine by the FB theorem (F\SCC / B\SCC / remainder) after
@@ -787,28 +804,57 @@ object GraphOps {
 
   /** [[stronglyConnectedComponentsReleasable]] with the finish bound
     * open: a negative `localFinishMaxEdges` forces the distributed
-    * path, a small one runs pivot rounds before the finish. */
+    * path; one below the raw edge count runs trim rounds, and pivot
+    * rounds too while the trimmed core stays above it, before the
+    * finish. */
   private[graft] def sccReleasable(edges: DataFrame, maxPivotRounds: Int,
       maxHops: Int, maxTrimRounds: Int = 64,
       localFinishMaxEdges: Long = LocalFinishMaxEdges)
       : (DataFrame, () => Unit) = held { h =>
     val ser = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-    val rawE = edges.select(col("a").cast("long").as("a"),
-      col("b").cast("long").as("b"))
+    // the raw edges, checkpointed once and counted (one job): the
+    // dispatch needs no job of its own, and the distributed path
+    // derives its edge and node sets from these blocks instead of
+    // evaluating the input twice
+    val (raw, rawN) = h.counted(edges.select(col("a").cast("long").as("a"),
+      col("b").cast("long").as("b")).iterCkptCounted(ser))
+    val out =
+      if (rawN <= localFinishMaxEdges) {
+        // Multistep's rule applied to the whole input: no trim round
+        lastSccPivotRounds = 0
+        val part = h(traced("local scc")(sccLocalPart(raw, ser)))
+        (part, () => graft.Release(part))
+      } else sccRounds(h, raw, maxPivotRounds, maxHops, maxTrimRounds,
+        localFinishMaxEdges, ser)
+    graft.Release(raw)
+    out
+  }
+
+  /** The trim → pivot → finish loop of [[sccReleasable]] over the
+    * checkpointed raw edges `raw`, which it releases once the working
+    * edge and node sets are materialized. */
+  private def sccRounds(h: Held, raw: DataFrame, maxPivotRounds: Int,
+      maxHops: Int, maxTrimRounds: Int, localFinishMaxEdges: Long,
+      ser: org.apache.spark.storage.StorageLevel)
+      : (DataFrame, () => Unit) = {
     // self-loops are cycle-irrelevant for MULTI-node SCCs (a is always
     // in scc(a)), so the working edge set drops them to keep the trim
     // rule exact — but the NODE set must come from the raw endpoints:
     // a page whose only links are self-links (common in web graphs) is
     // still a valid singleton SCC member of the output contract.
+    // A null endpoint is no node (as on the driver route): a null id
+    // would survive every anti join and count as a single each round.
     // Every edge checkpoint is counted (one job either way), so the
     // finish dispatch needs no job of its own. Edges and nodes are
-    // independent materializations of the input: overlapped.
+    // independent materializations of the raw blocks: overlapped.
     var ((e, eN), (nodes, remN)) = overlap(
-      h.counted(rawE.filter(col("a") =!= col("b")).distinct()
+      h.counted(raw.filter(col("a") =!= col("b")).distinct()
         .iterCkptCounted(ser)),
-      h.counted(rawE.select(col("a").as("id"))
-        .unionByName(rawE.select(col("b").as("id"))).distinct()
+      h.counted(raw.select(col("a").as("id"))
+        .unionByName(raw.select(col("b").as("id")))
+        .filter(col("id").isNotNull).distinct()
         .iterCkptCounted(ser)))
+    graft.Release(raw)
     // assigned components accumulate as a BUFFER of checkpointed
     // parts unioned lazily at the end — re-checkpointing the growing
     // union per round is the same O(n·rounds) rewrite reachFrom
@@ -961,24 +1007,29 @@ object GraphOps {
     lastSccPivotRounds = pivots
     if (regNodes != null) graft.Release(regNodes)
     graft.Release(nodes); graft.Release(e)
-    if (parts.isEmpty)
-      (edges.sparkSession.range(0)
-        .select(col("id"), col("id").as("scc")), () => ()) // edgeless
+    if (parts.isEmpty) // edgeless, on the forced-distributed path
+      (raw.sparkSession.range(0)
+        .select(col("id"), col("id").as("scc")), () => ())
     else {
       val kept = parts.toSeq
       (kept.reduce(_ unionByName _), () => kept.foreach(graft.Release(_)))
     }
   }
 
-  /** The serial finish as one more checkpointed part: collect the
-    * remaining edges and label their endpoints with [[sccMinLabels]].
-    * The labels are checkpointed, not left a local relation, so the
-    * final union reads blocks instead of shipping the rows inside
-    * every task. */
+  /** The serial SCC as one checkpointed (id, scc) part: collect the
+    * edges `e` and label their endpoints with [[sccMinLabels]] — the
+    * whole input below the finish bound, or what the trim and pivot
+    * rounds left. The labels are checkpointed, not left a local
+    * relation, so a union of parts reads blocks instead of shipping
+    * the rows inside every task. Duplicate edges and self-loops need
+    * no care: a node whose only edges are self-loops is its own
+    * component. A null endpoint is no node; the other end of a
+    * half-null edge stays one, as a self-loop. */
   private def sccLocalPart(e: DataFrame,
                            level: org.apache.spark.storage.StorageLevel)
       : DataFrame = {
-    val rows = e.select("a", "b").collect()
+    val rows = e.select(coalesce(col("a"), col("b")),
+      coalesce(col("b"), col("a"))).na.drop().collect()
     val (ids, scc) =
       sccMinLabels(rows.map(_.getLong(0)), rows.map(_.getLong(1)))
     val out = new java.util.ArrayList[Row](ids.length)

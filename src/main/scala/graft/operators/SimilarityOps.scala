@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
 
 /** Similarity search over an embedding column (`array<float>`).
@@ -405,9 +408,7 @@ object SimilarityOps {
   def kmeansFit(df: DataFrame, k: Int, iters: Int,
                 idCol: String = "vec_id",
                 vecCol: String = "embedding"): (DataFrame, DataFrame) = {
-    val init = (conv(substring(md5(col(idCol).cast("string")), 1, 8), 16, 10)
-      .cast("long") % k).cast("int").as("cluster")
-    var assign = df.select(col(idCol), col(vecCol), init)
+    var assign = df.select(col(idCol), col(vecCol), kmeansSeed(idCol, k))
     var lastCentroids: DataFrame = null
     for (_ <- 1 to iters) {
       val centroids = assign.groupBy(col("cluster"))
@@ -427,6 +428,11 @@ object SimilarityOps {
     require(lastCentroids != null, "iters must be >= 1")
     (assign, lastCentroids.select(col("_c").as("cluster"), col("_cv")))
   }
+
+  /** The md5 seed cluster of [[kmeans]]: a pure function of the id. */
+  private def kmeansSeed(idCol: String, k: Int): Column =
+    (conv(substring(md5(col(idCol).cast("string")), 1, 8), 16, 10)
+      .cast("long") % k).cast("int").as("cluster")
 
   /** Product quantization: split each vector into `m` contiguous
     * `subDim`-wide subvectors, train a deterministic k-means codebook
@@ -611,6 +617,29 @@ object SimilarityOps {
     * Scale shape: k-means cost (see [[kmeans]]) + one equi-join on the
     * cluster id + one broadcast-able anti join on the (small) drop
     * list. Cell sizes bound the pair count; raise k to cap them.
+    *
+    * Small inputs run on the driver (Multistep's rule, as the SCC
+    * finish): one bounded `limit` collect reads at most
+    * `GraphOps.LocalDedupMaxRows` + 1 rows with their md5 seed cluster,
+    * and when the input fits, the Lloyd rounds and the pair test run
+    * in driver memory with the Spark path's arithmetic — the
+    * [[VectorMeanAgg]] buffer's `reduce`/`finish`, means rounded to 4
+    * decimals half-up then cast to float, the shared float32 loop
+    * `functions.CosineF32.cosine`, NaN as null, the re-assignment order
+    * (similarity descending, nulls last, then cluster ascending) and
+    * pairs `a < b` whose rounded similarity reaches `threshold`. The
+    * result is `df` anti-joined with the local drop list, so no
+    * checkpoint is made. The bound caps the pair loop's worst case, a
+    * single cluster: n·(n−1)/2 cosines on one driver thread (PERF.md
+    * "SCC and semantic dedup on the driver"). Ids must be unique,
+    * non-null integers and vectors `array<float>`; any other input
+    * takes the distributed path. Two sums can differ in their last
+    * bits: the driver adds a cluster's vectors in row order, Spark per
+    * partition and then across partitions; they agree wherever the
+    * double sums are exact, and the 4-decimal round hides the rest
+    * except at a rounding tie. On ragged vectors, [[VectorMeanAgg]]
+    * keeps the first length a buffer sees: row order here, partition
+    * order (then the heavier buffer) in Spark.
     */
   def semanticDedup(df: DataFrame, k: Int, iters: Int, threshold: Double,
                     idCol: String = "vec_id",
@@ -622,12 +651,116 @@ object SimilarityOps {
     * [[graft.operators.TextAnalysisOps.bpeTokenizer]] pattern: without
     * it every invocation parks one corpus-sized checkpoint until the
     * ContextCleaner happens to GC it — min-of-N bench loops accumulate
-    * N copies). Call the handle after the consuming action completes.
+    * N copies). Call the handle after the consuming action completes;
+    * on the driver path it has nothing to free.
     */
   def semanticDedupReleasable(df: DataFrame, k: Int, iters: Int,
                               threshold: Double,
                               idCol: String = "vec_id",
                               vecCol: String = "embedding")
+      : (DataFrame, () => Unit) =
+    semDedupReleasable(df, k, iters, threshold, idCol, vecCol)
+
+  /** [[semanticDedupReleasable]] with the driver bound open: a negative
+    * `localMaxRows` forces the distributed path. */
+  private[graft] def semDedupReleasable(df: DataFrame, k: Int, iters: Int,
+      threshold: Double, idCol: String, vecCol: String,
+      localMaxRows: Int = GraphOps.LocalDedupMaxRows)
+      : (DataFrame, () => Unit) = {
+    require(k >= 1, s"k must be >= 1: $k")
+    require(iters >= 1, "iters must be >= 1")
+    val seeded = df.select(col(idCol), col(vecCol), kmeansSeed(idCol, k))
+    val driverTypes = seeded.schema.map(_.dataType).take(2) match {
+      case Seq(ByteType | ShortType | IntegerType | LongType,
+               ArrayType(FloatType, _)) => true
+      case _ => false
+    }
+    val drops =
+      if (localMaxRows < 0 || !driverTypes) None
+      else {
+        val rows = seeded.limit(localMaxRows + 1).collect()
+        if (rows.length > localMaxRows) None
+        else semDedupLocal(rows, iters, threshold)
+      }
+    drops match {
+      case Some(ids) =>
+        val dropDf = df.sparkSession.createDataFrame(
+          java.util.Arrays.asList(ids.map(Row(_)): _*),
+          StructType(Seq(seeded.schema.head)))
+        (df.join(dropDf, Seq(idCol), "left_anti"), () => ())
+      case None =>
+        semDedupDistributed(df, k, iters, threshold, idCol, vecCol)
+    }
+  }
+
+  /** The driver path of [[semanticDedup]] over collected (id, vector,
+    * seed cluster) rows: the ids to drop, or None when the ids are not
+    * unique and non-null (the distributed path then decides). */
+  private def semDedupLocal(rows: Array[Row], iters: Int,
+                            threshold: Double): Option[Array[Any]] = {
+    val n = rows.length
+    if (rows.exists(_.isNullAt(0))) return None
+    val ids = rows.map(_.getAs[Number](0).longValue)
+    if (ids.distinct.length != n) return None
+    val vecs = rows.map(r =>
+      if (r.isNullAt(1)) null else r.getSeq[Float](1).toArray)
+    val seqs = vecs.map(v =>
+      if (v == null) null
+      else scala.collection.immutable.ArraySeq.unsafeWrapArray(v))
+    val data: Array[ArrayData] = vecs.map(v =>
+      if (v == null) null else UnsafeArrayData.fromPrimitiveArray(v))
+    // NaN stands for null, as `noNaN` maps it
+    def sim(x: ArrayData, y: ArrayData): Double =
+      if (x == null || y == null || x.numElements != y.numElements) Double.NaN
+      else graft.functions.CosineF32.cosine(x, y)
+    // Spark's round(x, 4) on a double
+    def round4(x: Double): Double =
+      if (x.isNaN || x.isInfinite) x
+      else java.math.BigDecimal.valueOf(x)
+        .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue
+    val cluster = rows.map(_.getInt(2))
+    var alive = true // false once no centroid is left: every row drops out
+    var round = 0
+    while (alive && round < iters) {
+      round += 1
+      // ascending cluster ids, so the first best keeps a tie; each
+      // buffer takes its rows in row order
+      val cents = (0 until n).groupBy(cluster(_)).toSeq.sortBy(_._1)
+        .flatMap { case (c, members) =>
+          val b = VectorMeanAgg.zero
+          members.foreach(i => VectorMeanAgg.reduce(b, seqs(i)))
+          Option(VectorMeanAgg.finish(b)).map(m =>
+            (c, UnsafeArrayData.fromPrimitiveArray(
+              m.map(x => round4(x).toFloat).toArray): ArrayData))
+        }
+      alive = cents.nonEmpty
+      for (i <- 0 until n if alive) {
+        var best = cents(0)._1; var bestSim = sim(data(i), cents(0)._2)
+        for (j <- 1 until cents.length) {
+          val s = sim(data(i), cents(j)._2)
+          if (!s.isNaN && (bestSim.isNaN || s > bestSim)) {
+            best = cents(j)._1; bestSim = s
+          }
+        }
+        cluster(i) = best
+      }
+    }
+    val drop = new Array[Boolean](n)
+    if (alive) for (members <- (0 until n).groupBy(cluster(_)).values) {
+      val m = members.sortBy(ids(_)).toArray
+      // round4(s) ≤ s + 5e-5, so a similarity 1e-4 under the threshold
+      // cannot reach it: the exact test runs only near the threshold
+      for (j <- m.indices; i <- 0 until j if !drop(m(j))) {
+        val s = sim(data(m(i)), data(m(j)))
+        if (s >= threshold - 1e-4 && round4(s) >= threshold) drop(m(j)) = true
+      }
+    }
+    Some((0 until n).filter(drop(_)).map(rows(_).get(0)).toArray)
+  }
+
+  /** The Spark path of [[semanticDedup]]. */
+  private def semDedupDistributed(df: DataFrame, k: Int, iters: Int,
+      threshold: Double, idCol: String, vecCol: String)
       : (DataFrame, () => Unit) = {
     // the assignment feeds BOTH sides of the pair self-join — cut the
     // iterative lineage once instead of replaying every Lloyd round

@@ -149,11 +149,12 @@ object GraphQueries {
     // sf-stable): two 5-rings (doc_id < 10 — SCCs of 5) and a
     // scale-growing tendril mass (every doc_id ≥ 10 hangs off ring
     // node id%10, alternating direction by id%3 so BOTH trim classes
-    // — no-in and no-out — fire). One trim round drains the tendrils;
-    // the 10-edge core left is far under the finish bound, so the
-    // rings are labelled on the driver, not by pivot rounds. The
-    // algorithmic (non-planted) gate is GraphSpec's random-digraph
-    // property tests vs a driver Tarjan, on both paths.
+    // — no-in and no-out — fire). The whole graph (one edge per
+    // document) is far under GraphOps.LocalFinishMaxEdges, so it is
+    // checkpointed once, collected and labelled on the driver: no trim
+    // or pivot round runs. The algorithmic (non-planted) gate for the
+    // trim, pivot and finish rounds is GraphSpec's random-digraph
+    // property tests vs a driver Tarjan, on every route.
     "gr12_scc" -> ((s, d) =>
       leased("gr12_scc")(GraphOps.stronglyConnectedComponentsReleasable(
         sccBowtieEdges(s, d), maxPivotRounds = 16, maxHops = 8))),
@@ -208,11 +209,10 @@ object GraphQueries {
   )
 
   /** gr12/gr13's planted bow-tie: two 5-rings (doc_id < 10 — SCCs of
-    * 5; a constant-size core, finished on the driver once the trim has
-    * drained — the trim path, which is where web-graph mass actually
-    * drains, gets the scale-growing side) plus the tendril mass (every
-    * doc_id ≥ 10 hangs off ring node id % 10, alternating direction by
-    * id % 3 so BOTH trim classes fire). */
+    * 5; a constant-size core) plus the scale-growing tendril mass
+    * (every doc_id ≥ 10 hangs off ring node id % 10, alternating
+    * direction by id % 3 so BOTH trim classes fire on a graph above
+    * the driver bound). */
   private[graft] def sccBowtieEdges(s: SparkSession, d: String): DataFrame = {
     val ids = documents(s, d).select(col("doc_id").cast("long").as("id"))
     val ring = ids.filter(col("id") < 10).select(col("id").as("a"),

@@ -503,12 +503,83 @@ class ExtOpsSpec extends SparkSpec {
     // on it — the graft.Release lesson)
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = true))
-    val (ded, release) = SimilarityOps.semanticDedupReleasable(
-      base.unionByName(copies), k = 2, iters = 2, threshold = 0.95)
+    // (on the forced-distributed path: the driver path, which this
+    // input would take, makes no checkpoint)
+    val (ded, release) = SimilarityOps.semDedupReleasable(
+      base.unionByName(copies), k = 2, iters = 2, threshold = 0.95,
+      "vec_id", "embedding", localMaxRows = -1)
     assert(ded.select("vec_id").as[Long].collect().toSet == Set(0L, 5L))
     assert(spark.sparkContext.getPersistentRDDs.nonEmpty)
     release()
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+  }
+
+  test("semanticDedup: the driver path matches the distributed path on seeded vectors") {
+    val rnd = new scala.util.Random(23)
+    val dim = 8
+    def gauss(): Array[Double] = Array.fill(dim)(rnd.nextGaussian())
+    def unit(v: Array[Double]): Array[Double] = {
+      val n = math.sqrt(v.map(x => x * x).sum); v.map(_ / n)
+    }
+    // ids, vectors; a null vector is a failed embedding
+    val base = (0 until 60).map(i => (i.toLong, gauss().map(_.toFloat)))
+    val copies = base.take(10).map { case (i, v) => (i + 1000, v.clone) }
+    // pairs whose cosine sits within ±1.5e-4 of the threshold: rounded
+    // to 4 decimals, some reach 0.95 and some stop at 0.9499
+    val near = base.slice(10, 40).zipWithIndex.map { case ((i, v), j) =>
+      val u = unit(v.map(_.toDouble))
+      val w0 = gauss(); val d = w0.zip(u).map(p => p._1 * p._2).sum
+      val w = unit(w0.zip(u).map(p => p._1 - d * p._2))
+      val c = 0.95 + (j - 15) * 1e-5
+      (i + 2000, u.zip(w).map(p =>
+        (c * p._1 + math.sqrt(1 - c * c) * p._2).toFloat))
+    }
+    val nulls = Seq((3000L, null), (3001L, null), (3002L, Array.empty[Float]))
+    val mixed = (base ++ copies ++ near ++ nulls)
+      .map { case (i, v) => (i, Option(v).map(_.toSeq).orNull) }
+      .toDF("vec_id", "embedding")
+    def bothPaths(df: org.apache.spark.sql.DataFrame, k: Int, iters: Int,
+                  driver: Boolean = true): Set[Long] = {
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val (local, relL) = SimilarityOps.semDedupReleasable(df, k, iters,
+        0.95, "vec_id", "embedding")
+      val l = local.select("vec_id").as[Long].collect().toSet
+      assert((sc.getPersistentRDDs.keySet.toSet -- before).isEmpty == driver,
+        s"driver path expected: $driver")
+      relL()
+      val (dist, relD) = SimilarityOps.semDedupReleasable(df, k, iters,
+        0.95, "vec_id", "embedding", localMaxRows = -1)
+      val d = dist.select("vec_id").as[Long].collect().toSet
+      relD()
+      assert(l == d, s"driver path keeps ${(l -- d).toSeq.sorted}, " +
+        s"distributed keeps ${(d -- l).toSeq.sorted}")
+      l
+    }
+    val kept = bothPaths(mixed, k = 4, iters = 3)
+    assert(copies.forall(c => !kept(c._1)), "an exact copy survived")
+    assert(Set(3000L, 3001L, 3002L).subsetOf(kept))
+    val nearKept = near.map(_._1).count(kept)
+    assert(nearKept > 0 && nearKept < near.size,
+      s"$nearKept of ${near.size} near-threshold pairs kept")
+    // two tight groups under six md5 seed clusters: round 1 pulls every
+    // row to one of few centroids, so some seed clusters empty and drop
+    // out of the centroid table for round 2
+    val groups = (0 until 40).map { i =>
+      val v = Array.fill(dim)(0.01f * rnd.nextFloat())
+      v(i % 2) = 1f
+      (i.toLong, v.toSeq)
+    }.toDF("vec_id", "embedding")
+    val seeds = groups.select((conv(substring(md5(col("vec_id")
+      .cast("string")), 1, 8), 16, 10).cast("long") % 6).as("c"))
+      .distinct().count()
+    val afterRound1 = SimilarityOps.kmeans(groups, k = 6, iters = 1)
+      .select("cluster").distinct().count()
+    assert(seeds == 6 && afterRound1 < 6, s"$seeds seeds, $afterRound1 left")
+    bothPaths(groups, k = 6, iters = 3)
+    // repeated ids leave the driver path for the distributed one
+    bothPaths(mixed.unionByName(mixed.limit(5)), k = 4, iters = 2,
+      driver = false)
   }
 
   test("tfidf: corpus-wide term appears with zero idf; rare term scores high") {
@@ -654,7 +725,8 @@ class ExtOpsSpec extends SparkSpec {
   test("shingle generator matches declarative explode (distinct and not) on tricky inputs") {
     val tricky = Seq(
       (1L, "a  double  space"), (2L, "dup dup dup"), (3L, "héllo wörld x y"),
-      (4L, "one"), (5L, "")).toDF("doc_id", "text")
+      (4L, "one"), (5L, ""), (6L, "dup dup dup dup dup x"),
+      (7L, null.asInstanceOf[String])).toDF("doc_id", "text")
     for (k <- Seq(1, 2, 3)) {
       val declDistinct = tricky.select(col("doc_id"),
         explode(if (k == 1) DedupOps.words(col("text"))

@@ -649,6 +649,9 @@ class GraphSpec extends SparkSpec {
       for (a <- 0 until n; b <- 0 until n if rnd.nextInt(100) < pct)
         yield (a.toLong, b.toLong)
     val graphs = Seq(bowties(4), bowties(7), random(30, 8), random(60, 3))
+    // every graph here is far under LocalFinishMaxEdges, so the
+    // "serial finish" side takes the whole-input driver route (no trim
+    // round); the trim → finish route is pinned in the next test
     graphs.zipWithIndex.foreach { case (es, i) =>
       val want = sccModel(es)
       val (local, localPivots) = sccOf(es, GraphOps.LocalFinishMaxEdges)
@@ -658,6 +661,79 @@ class GraphSpec extends SparkSpec {
       assert(localPivots == 0, s"graph $i: the finish ran $localPivots pivots")
       // several components survive the trim in every graph here
       assert(distPivots > 0, s"graph $i: the distributed path never pivoted")
+    }
+  }
+
+  test("scc: every route agrees with Tarjan on graphs with duplicate edges and self-loops") {
+    val rnd = new scala.util.Random(11)
+    // random arcs plus a planted 5-ring fed by a 5-node tendril chain
+    // (so a trim round always fires and a core survives it), self-
+    // loops on some connected nodes, isolated nodes whose only edges
+    // are (repeated) self-loops, and a quarter of all edges repeated
+    def graph(n: Int, pct: Int): Seq[(Long, Long)] = {
+      val arcs = for (a <- 0 until n; b <- 0 until n
+        if a != b && rnd.nextInt(100) < pct) yield (a.toLong, b.toLong)
+      val ring = (0L until 5L).map(i => (i, (i + 1) % 5))
+      val chain = (n.toLong until n + 4L).map(i => (i, i + 1)) :+
+        ((n + 4L, 0L))
+      val loops = (0L until n.toLong).filter(_ => rnd.nextInt(6) == 0)
+        .map(v => (v, v))
+      val isolated = (n + 10L until n + 13L)
+        .flatMap(v => Seq.fill(1 + rnd.nextInt(2))((v, v)))
+      val es = arcs ++ ring ++ chain ++ loops ++ isolated
+      rnd.shuffle(es ++ es.filter(_ => rnd.nextInt(4) == 0))
+    }
+    // edges left at the trim fixpoint: what the finish bound is
+    // compared with when the raw input is over it
+    def trimmed(es: Seq[(Long, Long)]): Int = {
+      var e = es.filter { case (a, b) => a != b }.distinct
+      var n = -1
+      while (n != e.size) {
+        n = e.size
+        val core = e.map(_._1).toSet intersect e.map(_._2).toSet
+        e = e.filter { case (a, b) => core(a) && core(b) }
+      }
+      e.size
+    }
+    def run(es: Seq[(Long, Long)], bound: Long): (Map[Long, Long], Int, Int) = {
+      val (df, rel) = GraphOps.sccReleasable(es.toDF("a", "b"),
+        maxPivotRounds = 64, maxHops = 64, localFinishMaxEdges = bound)
+      val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val parts = df.queryExecution.analyzed.collectLeaves().size
+      rel()
+      (got, GraphOps.lastSccPivotRounds, parts)
+    }
+    for ((n, pct) <- Seq((25, 6), (40, 5), (60, 3))) {
+      val es = graph(n, pct)
+      val want = sccModel(es)
+      val core = trimmed(es)
+      assert(core > 0 && core < es.size, s"n=$n: core $core of ${es.size}")
+      // whole input on the driver: one labelled part, no round
+      val (whole, wholePivots, wholeParts) = run(es, GraphOps.LocalFinishMaxEdges)
+      assert(whole == want, s"n=$n: whole-input driver route")
+      assert(wholePivots == 0 && wholeParts == 1, s"n=$n: $wholeParts parts")
+      // trim → finish: the trimmed core fits, the raw input does not
+      val (tf, tfPivots, tfParts) = run(es, core)
+      assert(tf == want, s"n=$n: trim → finish route")
+      assert(tfPivots == 0 && tfParts > 1, s"n=$n: $tfPivots pivots")
+      // trim → pivot → finish under a bound of 12
+      val (mixed, _, _) = run(es, 12)
+      assert(mixed == want, s"n=$n: bound-12 route")
+      // forced distributed
+      val (dist, distPivots, _) = run(es, -1)
+      assert(dist == want, s"n=$n: forced-distributed route")
+      assert(distPivots > 0, s"n=$n: the distributed route never pivoted")
+    }
+    // a null endpoint is no node, and the other end of a half-null
+    // edge still is one, on every route
+    val halfNull = Seq((Some(1L), Some(2L)), (Some(2L), Some(1L)),
+      (Some(3L), None), (None, None)).toDF("a", "b")
+    for (bound <- Seq(GraphOps.LocalFinishMaxEdges, 1L, -1L)) {
+      val (hn, relHn) = GraphOps.sccReleasable(halfNull, 4, 4,
+        localFinishMaxEdges = bound)
+      assert(hn.as[(Long, Long)].collect().sorted.toSeq ==
+        Seq(1L -> 1L, 2L -> 1L, 3L -> 3L), s"bound $bound")
+      relHn()
     }
   }
 
