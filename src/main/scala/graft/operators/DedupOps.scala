@@ -1136,9 +1136,38 @@ object DedupOps {
     * posting strings it saved (+11% shuffle bytes, +9% wall at 500 k
     * docs). Short shingles make the hash pass nearly as wide as the
     * strings; the shape stays re-runnable in PerfCompare.
+    *
+    * Small inputs run on the driver (Multistep's rule, as
+    * [[SimilarityOps.semanticDedup]]): one bounded collect reads at most
+    * `DriverPath.LocalShingleMaxRows` + 1 `(id, text)` rows, and an
+    * input that fits, with unique non-null integral ids, gets the same
+    * posting lists, cap, counts and `round(·, 4)` in driver memory
+    * (`ShingleDriver`), returned as a local frame with this plan's
+    * schema. Any other input runs the plan above.
     */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
-                       k: Int, threshold: Double, maxDf: Int): DataFrame = {
+                       k: Int, threshold: Double, maxDf: Int): DataFrame =
+    containmentPairsBounded(df, idCol, textCol, k, threshold, maxDf,
+      DriverPath.LocalShingleMaxRows)
+
+  /** [[containmentPairs]] with the driver bound open: a negative
+    * `localMaxRows` forces the distributed path. */
+  private[graft] def containmentPairsBounded(df: DataFrame, idCol: String,
+      textCol: String, k: Int, threshold: Double, maxDf: Int,
+      localMaxRows: Int): DataFrame = {
+    require(maxDf >= 0, s"maxDf must be >= 0: $maxDf")
+    ShingleDriver.collect(df, idCol, textCol, localMaxRows) match {
+      case Some(docs) => ShingleDriver.containmentPairs(docs, k, threshold,
+        maxDf)
+      case None => containmentDistributed(df, idCol, textCol, k, threshold,
+        maxDf)
+    }
+  }
+
+  /** The Spark plan of [[containmentPairs]]. */
+  private def containmentDistributed(df: DataFrame, idCol: String,
+      textCol: String, k: Int, threshold: Double,
+      maxDf: Int): DataFrame = {
     val sh = df.select(col(idCol),
       graft.functions.ShingleGen.shingleGen(col(textCol), k,
         distinct = true)).toDF(idCol, "_s")
@@ -1166,43 +1195,6 @@ object DedupOps {
         round(col("n_shared").cast("double") / col("n_a"), 4))
       .filter(col("containment") >= threshold)
       .select(col("a"), col("b"), col("n_shared"), col("containment"))
-  }
-
-  /** [[containmentPairs]] with the posting table CHECKPOINTED between
-    * its two consumers instead of riding the ReusedExchange — the dd18
-    * staging shape, kept as an A/B variant (Dd12AB probe, r18 verdict
-    * item 4). Result-identical by construction (same posting lists,
-    * same arithmetic); only the materialization boundary differs. The
-    * PRODUCTION form stays [[containmentPairs]] — measured faster at
-    * both 500 k synthetic docs (r17, +9 % for the staged form) and the
-    * dd12 lane's sf0.1 input (r19: see OPTIMIZATION_r19.md).
-    */
-  private[graft] def containmentPairsStagedReleasable(df: DataFrame,
-      idCol: String, textCol: String, k: Int, threshold: Double,
-      maxDf: Int): (DataFrame, () => Unit) = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-    val sh = df.select(col(idCol),
-      graft.functions.ShingleGen.shingleGen(col(textCol), k,
-        distinct = true)).toDF(idCol, "_s")
-    val postings = graft.Ckpt(sh.groupBy(col("_s"))
-      .agg(graft.functions.BoundedCollect
-        .boundedCollectList(col(idCol), maxDf + 1).as("_ids"))
-      .filter(size(col("_ids")) <= maxDf)
-      .select(col("_ids")), MEMORY_AND_DISK_SER)
-    val nA = postings.select(explode(col("_ids")).as(idCol))
-      .groupBy(col(idCol)).agg(count(lit(1)).as("n_a"))
-    val pairs = postings
-      .select(explode(col("_ids")).as("a"), col("_ids"))
-      .select(col("a"), explode(col("_ids")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .groupBy(col("a"), col("b"))
-      .agg(count(lit(1)).as("n_shared"))
-    val out = pairs.join(nA.select(col(idCol).as("a"), col("n_a")), Seq("a"))
-      .withColumn("containment",
-        round(col("n_shared").cast("double") / col("n_a"), 4))
-      .filter(col("containment") >= threshold)
-      .select(col("a"), col("b"), col("n_shared"), col("containment"))
-    (out, () => graft.Release(postings))
   }
 
   /** Blocked n-gram Jaccard similarity pairs: self-join restricted to a
@@ -1262,13 +1254,21 @@ object DedupOps {
     * table; after the filter every gram key fans out ≤ maxTruthDf ×
     * (sampled ≤ maxTruthDf) pairs, the dd12 per-key bound.
     *
-    * ONE LIVE RESULT per process: the returned frame reads a staged
-    * checkpoint whose release is parked under one process-global
-    * [[graft.Leases]] key, so the NEXT call to `lshRecallEval` (any
-    * session, any arguments) frees it. Consume a result fully before
-    * calling again; a frame kept past the next call fails with missing
-    * blocks. A caller that needs overlapping results must use
-    * [[lshRecallEvalReleasable]] and release each handle itself.
+    * Small inputs run on the driver: an input of at most
+    * `DriverPath.LocalShingleMaxRows` documents with unique non-null
+    * integral ids is collected once and evaluated in driver memory with
+    * the same generators, digests, caps and rounding (`ShingleDriver`);
+    * the result is a local frame and no checkpoint is made.
+    *
+    * ONE LIVE RESULT per process on the distributed path: the returned
+    * frame reads a staged checkpoint whose release is parked under one
+    * process-global [[graft.Leases]] key, so the NEXT call to
+    * `lshRecallEval` (any session, any arguments) frees it. Consume a
+    * result fully before calling again; a frame kept past the next call
+    * fails with missing blocks. A caller that needs overlapping results
+    * must use [[lshRecallEvalReleasable]] and release each handle
+    * itself. A driver-path result reads no checkpoint, so the next call
+    * cannot invalidate it.
     */
   def lshRecallEval(df: DataFrame, idCol: String, textCol: String,
                     shingleK: Int, numPerm: Int, bands: Int,
@@ -1299,15 +1299,49 @@ object DedupOps {
     * scan; the grams checkpoint is released inline once the tagged
     * table is materialized. Results are bit-identical (same
     * expressions, same cap discipline — the oracle replays unchanged).
+    * On the driver path the handle has nothing to free.
     */
   def lshRecallEvalReleasable(df: DataFrame, idCol: String, textCol: String,
                     shingleK: Int, numPerm: Int, bands: Int,
                     theta: Double, samplePct: Int,
-                    maxTruthDf: Int = 100000): (DataFrame, () => Unit) = {
+                    maxTruthDf: Int = 100000): (DataFrame, () => Unit) =
+    lshRecallEvalBounded(df, idCol, textCol, shingleK, numPerm, bands,
+      theta, samplePct, maxTruthDf, DriverPath.LocalShingleMaxRows)
+
+  /** [[lshRecallEvalReleasable]] with the driver bound open: a negative
+    * `localMaxRows` forces the distributed path. */
+  private[graft] def lshRecallEvalBounded(df: DataFrame, idCol: String,
+      textCol: String, shingleK: Int, numPerm: Int, bands: Int,
+      theta: Double, samplePct: Int, maxTruthDf: Int,
+      localMaxRows: Int): (DataFrame, () => Unit) = {
     require(maxTruthDf >= 1, s"maxTruthDf must be >= 1: $maxTruthDf")
+    ShingleDriver.collect(df, idCol, textCol, localMaxRows) match {
+      case Some(docs) =>
+        (ShingleDriver.lshRecallEval(docs, shingleK, numPerm, bands, theta,
+          samplePct, maxTruthDf, gramDigest, sampleBucket), () => ())
+      case None => lshRecallEvalDistributed(df, idCol, textCol, shingleK,
+        numPerm, bands, theta, samplePct, maxTruthDf)
+    }
+  }
+
+  /** The 16-byte md5 digest [[lshRecallEval]] keys a gram by. */
+  private def gramDigest(s: Column): Column = unhex(md5(s))
+
+  /** The lower-hex md5 digest [[lshTruthCapReport]] names a gram by. */
+  private def gramHex(s: Column): Column = lower(md5(s))
+
+  /** An id's probe-sample bucket, 0–99. */
+  private def sampleBucket(id: Column): Column =
+    conv(substring(md5(id.cast("string")), 1, 8), 16, 10).cast("long") % 100
+
+  /** The Spark plan of [[lshRecallEvalReleasable]]. */
+  private def lshRecallEvalDistributed(df: DataFrame, idCol: String,
+      textCol: String, shingleK: Int, numPerm: Int, bands: Int,
+      theta: Double, samplePct: Int,
+      maxTruthDf: Int): (DataFrame, () => Unit) = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
     val grams = graft.Ckpt(distinctShingles(df, idCol, textCol, shingleK)
-      .select(col("_id"), unhex(md5(col("_s"))).as("_g")),
+      .select(col("_id"), gramDigest(col("_s")).as("_g")),
       MEMORY_AND_DISK_SER)
     val dfreq = grams.groupBy("_g").agg(count(lit(1)).as("_df"))
     val tagged = graft.Ckpt(grams.join(dfreq, Seq("_g")),
@@ -1318,9 +1352,7 @@ object DedupOps {
       sum(when(col("_df") > maxTruthDf, 1L).otherwise(0L)).as("_nc"))
     val kept = tagged.filter(col("_df") <= maxTruthDf)
       .select("_id", "_g")
-    val bucket = conv(substring(md5(col("_id").cast("string")), 1, 8), 16, 10)
-      .cast("long") % 100
-    val probeGrams = kept.filter(bucket < samplePct)
+    val probeGrams = kept.filter(sampleBucket(col("_id")) < samplePct)
       .select(col("_id").as("a"), col("_g"))
     val inter = probeGrams
       .join(kept.select(col("_id").as("b"), col("_g")), Seq("_g"))
@@ -1365,12 +1397,32 @@ object DedupOps {
     * over-threshold overlap sits in capped grams), so `capped eval +
     * this report` carries strictly more information than the uncapped
     * eval's silent cost cliff. The frame is hot-grams-only — tiny by
-    * construction (df > maxTruthDf is the boilerplate tail).
+    * construction (df > maxTruthDf is the boilerplate tail). Inputs of
+    * at most `DriverPath.LocalTruthCapMaxRows` documents run on the
+    * driver, as [[lshRecallEval]]'s small inputs do.
     */
   def lshTruthCapReport(df: DataFrame, idCol: String, textCol: String,
                         shingleK: Int, maxTruthDf: Int): DataFrame =
+    lshTruthCapReportBounded(df, idCol, textCol, shingleK, maxTruthDf,
+      DriverPath.LocalTruthCapMaxRows)
+
+  /** [[lshTruthCapReport]] with the driver bound open: a negative
+    * `localMaxRows` forces the distributed path. */
+  private[graft] def lshTruthCapReportBounded(df: DataFrame, idCol: String,
+      textCol: String, shingleK: Int, maxTruthDf: Int,
+      localMaxRows: Int): DataFrame =
+    ShingleDriver.collect(df, idCol, textCol, localMaxRows) match {
+      case Some(docs) => ShingleDriver.lshTruthCapReport(docs, shingleK,
+        maxTruthDf, gramHex)
+      case None => truthCapDistributed(df, idCol, textCol, shingleK,
+        maxTruthDf)
+    }
+
+  /** The Spark plan of [[lshTruthCapReport]]. */
+  private def truthCapDistributed(df: DataFrame, idCol: String,
+      textCol: String, shingleK: Int, maxTruthDf: Int): DataFrame =
     distinctShingles(df, idCol, textCol, shingleK)
-      .select(lower(md5(col("_s"))).as("gram_digest"))
+      .select(gramHex(col("_s")).as("gram_digest"))
       .groupBy("gram_digest").agg(count(lit(1)).as("df"))
       .filter(col("df") > maxTruthDf)
       // integer div — exact at any df (df·(df−1) is always even)

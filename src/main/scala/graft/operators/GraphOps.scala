@@ -395,18 +395,6 @@ object GraphOps {
     * driver memory, while a round's jobs spread over the executors. */
   private[graft] val LocalFinishMaxEdges = 100000L
 
-  /** The most rows `SimilarityOps.semanticDedup` clusters and pairs on
-    * the driver instead of running its Spark rounds (the same rule as
-    * [[LocalFinishMaxEdges]]). The pair loop's worst case is one
-    * cluster holding every row, n·(n−1)/2 cosines on one thread. Why
-    * 4,000: on 64-dim vectors (4 cores) that worst case took 0.69 s
-    * against 0.82 s for the distributed call at k = 8 and 3.5 s at
-    * k = 1; at 6,000 rows it reached the distributed k = 8 cost
-    * (1.39 s both; PERF.md "SCC and semantic dedup on the driver").
-    * The pair cost grows with the dimension too, so wider vectors
-    * move the crossover down. */
-  private[graft] val LocalDedupMaxRows = 4000
-
   /** k-core: peel nodes of degree < k from the UNDIRECTED graph for up
     * to `maxRounds` rounds (early-stop when a round removes nothing —
     * output-invariant, since further peels would also be no-ops).

@@ -620,7 +620,7 @@ object SimilarityOps {
     *
     * Small inputs run on the driver (Multistep's rule, as the SCC
     * finish): one bounded `limit` collect reads at most
-    * `GraphOps.LocalDedupMaxRows` + 1 rows with their md5 seed cluster,
+    * `DriverPath.LocalDedupMaxRows` + 1 rows with their md5 seed cluster,
     * and when the input fits, the Lloyd rounds and the pair test run
     * in driver memory with the Spark path's arithmetic — the
     * [[VectorMeanAgg]] buffer's `reduce`/`finish`, means rounded to 4
@@ -665,7 +665,7 @@ object SimilarityOps {
     * `localMaxRows` forces the distributed path. */
   private[graft] def semDedupReleasable(df: DataFrame, k: Int, iters: Int,
       threshold: Double, idCol: String, vecCol: String,
-      localMaxRows: Int = GraphOps.LocalDedupMaxRows)
+      localMaxRows: Int = DriverPath.LocalDedupMaxRows)
       : (DataFrame, () => Unit) = {
     require(k >= 1, s"k must be >= 1: $k")
     require(iters >= 1, "iters must be >= 1")
@@ -676,16 +676,12 @@ object SimilarityOps {
       case _ => false
     }
     val drops =
-      if (localMaxRows < 0 || !driverTypes) None
-      else {
-        val rows = seeded.limit(localMaxRows + 1).collect()
-        if (rows.length > localMaxRows) None
-        else semDedupLocal(rows, iters, threshold)
-      }
+      if (!driverTypes) None
+      else DriverPath.collectAtMost(seeded, localMaxRows)
+        .flatMap(semDedupLocal(_, iters, threshold))
     drops match {
       case Some(ids) =>
-        val dropDf = df.sparkSession.createDataFrame(
-          java.util.Arrays.asList(ids.map(Row(_)): _*),
+        val dropDf = DriverPath.frame(df.sparkSession, ids.map(Row(_)),
           StructType(Seq(seeded.schema.head)))
         (df.join(dropDf, Seq(idCol), "left_anti"), () => ())
       case None =>
@@ -713,11 +709,6 @@ object SimilarityOps {
     def sim(x: ArrayData, y: ArrayData): Double =
       if (x == null || y == null || x.numElements != y.numElements) Double.NaN
       else graft.functions.CosineF32.cosine(x, y)
-    // Spark's round(x, 4) on a double
-    def round4(x: Double): Double =
-      if (x.isNaN || x.isInfinite) x
-      else java.math.BigDecimal.valueOf(x)
-        .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue
     val cluster = rows.map(_.getInt(2))
     var alive = true // false once no centroid is left: every row drops out
     var round = 0
@@ -730,8 +721,8 @@ object SimilarityOps {
           val b = VectorMeanAgg.zero
           members.foreach(i => VectorMeanAgg.reduce(b, seqs(i)))
           Option(VectorMeanAgg.finish(b)).map(m =>
-            (c, UnsafeArrayData.fromPrimitiveArray(
-              m.map(x => round4(x).toFloat).toArray): ArrayData))
+            (c, UnsafeArrayData.fromPrimitiveArray(m.map(x =>
+              DriverPath.round(x, 4).toFloat).toArray): ArrayData))
         }
       alive = cents.nonEmpty
       for (i <- 0 until n if alive) {
@@ -748,11 +739,12 @@ object SimilarityOps {
     val drop = new Array[Boolean](n)
     if (alive) for (members <- (0 until n).groupBy(cluster(_)).values) {
       val m = members.sortBy(ids(_)).toArray
-      // round4(s) ≤ s + 5e-5, so a similarity 1e-4 under the threshold
+      // round(s, 4) ≤ s + 5e-5, so a similarity 1e-4 under the threshold
       // cannot reach it: the exact test runs only near the threshold
       for (j <- m.indices; i <- 0 until j if !drop(m(j))) {
         val s = sim(data(m(i)), data(m(j)))
-        if (s >= threshold - 1e-4 && round4(s) >= threshold) drop(m(j)) = true
+        if (s >= threshold - 1e-4 && DriverPath.round(s, 4) >= threshold)
+          drop(m(j)) = true
       }
     }
     Some((0 until n).filter(drop(_)).map(rows(_).get(0)).toArray)

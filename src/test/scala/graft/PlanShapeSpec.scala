@@ -272,8 +272,23 @@ class PlanShapeSpec extends SparkSpec {
     // the fused shape's contract: after the single posting-build
     // exchange, the only join left in the pair path is the final
     // broadcast of the per-doc denominator — a reappearing posting
-    // self-join would re-exchange the index
-    val plan = finalPlan("dd12_containment")
+    // self-join would re-exchange the index. The lane's input (docs ∪
+    // excerpts) is small enough for the driver path, so the plan is
+    // pinned on the forced-distributed path over the same input.
+    import org.apache.spark.sql.functions._
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+      .select("doc_id", "text")
+    val excerpts = docs.filter(col("doc_id") < 50)
+      .select((col("doc_id") + 20000).as("doc_id"),
+        array_join(slice(split(col("text"), " "), 1, 20), " ").as("text"))
+    val df = graft.operators.DedupOps.containmentPairsBounded(
+      docs.unionByName(excerpts), "doc_id", "text", k = 3, threshold = 0.8,
+      maxDf = 20, localMaxRows = -1)
+    df.collect()
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
     def joinsIn(p: org.apache.spark.sql.execution.SparkPlan): Seq[String] = {
       val here = p match {
         case j: org.apache.spark.sql.execution.joins.BaseJoinExec =>

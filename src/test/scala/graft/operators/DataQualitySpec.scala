@@ -282,6 +282,37 @@ class DataQualitySpec extends SparkSpec {
       got.toString)
   }
 
+  test("provenanceAudit: drift matches the full outer join on one-sided and null shards") {
+    val source = (1L to 6L).toDF("doc_id")
+    // shard 1 matches its claim, 2 is over-claimed, 3 only the
+    // manifest has (claims 0 and 2), 4 only the placements have, and
+    // both sides carry null shards
+    val placements = Seq((Option(1L), Option(1L)), (Some(2L), Some(2L)),
+      (Some(3L), Some(2L)), (Some(4L), Some(4L)), (Some(5L), None),
+      (Some(6L), None)).toDF("doc_id", "shard")
+    val manifest = Seq((Option(1L), Option(1L)), (Some(2L), Some(5L)),
+      (Some(3L), Some(0L)), (Some(3L), Some(2L)), (None, Some(2L)),
+      (None, Some(0L)), (None, None)).toDF("shard", "n_docs")
+    type DF = org.apache.spark.sql.DataFrame
+    def drift(f: (DF, DF, DF, DF, DF, String) => DF, p: DF, m: DF) =
+      f(source, source, source.filter(lit(false)), p, m, "doc_id")
+        .as[(String, Long)].collect().toMap.apply("manifest_drift_shards")
+    // 2 (over-claimed) + 3's claim of 2 + 4 + the null-shard placements
+    // + the null-shard claim of 2
+    assert(drift(provenanceAudit, placements, manifest) == 5L)
+    val cases = Seq(
+      "as built" -> (placements, manifest),
+      "manifest only" -> (placements.filter(lit(false)), manifest),
+      "placements only" -> (placements, manifest.filter(lit(false))),
+      "null shards only" -> (placements.filter($"shard".isNull),
+        manifest.filter($"shard".isNull)),
+      "both empty" -> (placements.filter(lit(false)),
+        manifest.filter(lit(false))))
+    for ((what, (p, m)) <- cases)
+      assert(drift(provenanceAudit, p, m) ==
+        drift(ProvenanceJoinOracle.provenanceAudit, p, m), what)
+  }
+
   test("provenanceAudit: the five id checks read placements through one id-keyed exchange") {
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.execution.SparkPlan
